@@ -50,27 +50,41 @@ final case class PipelineConfig(
 
 object PipelineConfig {
 
+  /** Parses the properties; a malformed or out-of-range numeric value
+    * fails with its key in the message. */
   def fromProperties(props: Properties): PipelineConfig = {
     val m = props.asScala
     def get(k: String, dflt: String) = m.getOrElse(k, dflt)
     def getList(k: String, dflt: String) =
       get(k, dflt).split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    // `min` is the smallest legal value: 1 for sizes, 0 for counts/delays
+    def long(k: String, dflt: String, min: Long): Long = {
+      val v = get(k, dflt).trim
+      val n = v.toLongOption.getOrElse(
+        throw new IllegalArgumentException(s"$k must be an integer >= $min; got '$v'"))
+      require(n >= min, s"$k must be an integer >= $min; got $n")
+      n
+    }
+    def int(k: String, dflt: String, min: Int): Int = {
+      val n = long(k, dflt, min)
+      require(n <= Int.MaxValue, s"$k must be at most ${Int.MaxValue}; got $n")
+      n.toInt
+    }
     PipelineConfig(
       bootstrapServers = get("kafka.bootstrap.servers", "localhost:9092"),
       topics = getList("kafka.topic", "events"),
       groupId = get("kafka.consumer.groupid", "graft"),
       startingOffsets = get("kafka.auto.offset.reset", "earliest"),
-      maxOffsetsPerTrigger =
-        m.get("kafka.maxOffsetsPerTrigger").map(_.trim.toLong).orElse(Some(100000L)),
+      maxOffsetsPerTrigger = Some(long("kafka.maxOffsetsPerTrigger", "100000", 1)),
       requiredFields = getList("check.field", "cTime,essCode"),
-      windowSize = get("window.size", "20").toInt,
+      windowSize = int("window.size", "20", 1),
       env = get("flink.env", get("env", "test")),
       checkpointLocation = get("checkpoint.path", "/tmp/graft-checkpoints"),
-      triggerIntervalMs = get("checkpoint.interval", "5000").toLong,
+      triggerIntervalMs = long("checkpoint.interval", "5000", 0),
       sinkDatabase = get("clickhouse.database", "sink"),
       sinkTable = get("clickhouse.table", "events"),
-      sinkMaxRetries = get("clickhouse.maxRetries", "3").toInt,
-      sinkRetryBackoffMs = get("clickhouse.retryBackoffMs", "100").toLong,
+      sinkMaxRetries = int("clickhouse.maxRetries", "3", 0),
+      sinkRetryBackoffMs = long("clickhouse.retryBackoffMs", "100", 0),
       stringTypes = get("clickhouse.stringTypes", "String,Date,DateTime")
         .split(",").map(_.trim.toLowerCase).toSet,
       stateBackend = get("state.backend", "hashmap"))

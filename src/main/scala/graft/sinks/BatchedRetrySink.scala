@@ -1,6 +1,5 @@
 package graft.sinks
 
-import graft.config.PipelineConfig
 import org.apache.spark.sql.DataFrame
 
 /** Pluggable statement writer — the seam where a JDBC/ClickHouse/HTTP
@@ -16,11 +15,19 @@ trait StatementWriter extends Serializable {
   * 49-70) for Spark's execution model:
   *
   *  - statement generation is distributed (SqlInsertFormatter);
-  *  - writes run per-partition on executors, not on the driver;
-  *  - retry is per-partition with exponential backoff; exhausting
-  *    retries rethrows, failing the task → Spark/Structured Streaming
-  *    replays the batch (at-least-once; pair with an idempotence key —
-  *    `batchId` — for effectively-once, which the reference lacks).
+  *  - writes run per-partition on executors, one task per executor
+  *    slot, not on the driver;
+  *  - retry is per chunk with exponential backoff; exhausting retries
+  *    rethrows, failing the task → Spark/Structured Streaming replays
+  *    the batch.
+  *
+  * Delivery is AT-LEAST-ONCE per chunk transaction: a chunk commits as
+  * one unit ([[JdbcStatementWriter]]), but nothing records which
+  * chunks of a batch already committed — `batchId` reaches the writer
+  * and the JDBC writer ignores it — so a batch replayed after a crash
+  * between the sink commit and the checkpoint commit writes its rows
+  * twice. Effectively-once needs a ledger keyed by (batchId, partition,
+  * chunk) in the chunk's transaction (ROADMAP direction 2).
   */
 class BatchedRetrySink(
     writer: StatementWriter,
@@ -29,12 +36,17 @@ class BatchedRetrySink(
     chunkSize: Int = 4096) extends Serializable {
 
   /** foreachBatch-compatible entry point: format + write one micro-batch.
-    * `keyExpr` partitions the batching (reference keyBy(essCode));
-    * `spark_partition_id()` keys batches by source partition so the
-    * single batching shuffle stays uniform — use a domain key when
-    * per-key statement ordering matters. Statements stream through in
-    * chunks of `chunkSize` (the retry unit must be replayable, so each
-    * chunk is materialized, but never the whole partition). */
+    * `keyExpr` partitions the batching (reference keyBy(essCode)); each
+    * statement holds at most `batchSize` rows of one key, in source
+    * order. Formatting costs one hash exchange on the key into
+    * `defaultParallelism` partitions and one sort per partition, and
+    * the write runs in the same tasks: one per executor slot, since
+    * AQE would fold the batch's small shuffle into a single task if
+    * the partition count were left to it (see
+    * [[SqlInsertFormatter.insertStatements]]). Statements stream
+    * through in chunks of `chunkSize` (the retry unit must be
+    * replayable, so each chunk is materialized, but never the whole
+    * partition). */
   def writeBatch(table: String, keyExpr: org.apache.spark.sql.Column, batchSize: Int,
       targetTypes: Map[String, String] = Map.empty,
       dialect: SqlDialect = SqlDialect.ClickHouseLike)(
@@ -51,10 +63,6 @@ class BatchedRetrySink(
       }
     }
   }
-
-  def fromConfig(cfg: PipelineConfig): (DataFrame, Long) => Unit =
-    writeBatch(s"${cfg.sinkDatabase}.${cfg.sinkTable}",
-      org.apache.spark.sql.functions.spark_partition_id(), cfg.windowSize)
 }
 
 object BatchedRetrySink {

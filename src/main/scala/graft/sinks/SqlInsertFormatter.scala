@@ -1,6 +1,6 @@
 package graft.sinks
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -212,26 +212,58 @@ object SqlInsertFormatter {
     concat(lit("("), concat_ws(",", parts.toIndexedSeq: _*), lit(")"))
   }
 
-  /** Batch the rows of `df` into multi-row INSERT statements of at most
-    * `batchSize` rows per target-partition key. Output: one row per
-    * statement, column `stmt`. Single shuffle on the batch key. */
+  /** Batch the rows of `df` into multi-row INSERT statements: each
+    * holds at most `batchSize` consecutive rows of one key, taken in
+    * source order. Output: one row per statement, column `stmt`, in
+    * `defaultParallelism` partitions, so a writer over them runs one
+    * task per executor slot. The statement set is a deterministic
+    * function of the input's rows and partitioning.
+    *
+    * One shuffle, one sort. The key and the source order (`__seq`) are
+    * stamped before the exchange: a nondeterministic `keyExpr` such as
+    * `spark_partition_id()` must see the source partitioning, and the
+    * order is lost once rows cross a shuffle. The hash exchange on the
+    * key has an explicit partition count because AQE's byte-sized
+    * coalescing folds a micro-batch's small shuffle into one task,
+    * which would serialize the formatting and every write of the
+    * batch; AQE keeps an explicit count. After the exchange the VALUES
+    * tuples are formatted, each partition is sorted by (key, source
+    * order), and a streaming chunker cuts the statements, holding one
+    * at a time. */
   def insertStatements(df: DataFrame, table: String, keyExpr: Column, batchSize: Int,
       targetTypes: Map[String, String] = Map.empty,
       dialect: SqlDialect = SqlDialect.ClickHouseLike): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val cols = df.columns.mkString(",")
-    // materialize the key ONCE before the window shuffle: a
-    // nondeterministic keyExpr (e.g. spark_partition_id) re-evaluated
-    // after the exchange would merge batches across source partitions
-    // and overflow the batchSize contract
-    val keyed = df.withColumn("__tuple", valuesTuple(df, targetTypes, dialect))
-      .withColumn("__key", keyExpr)
-    val byKey = Window.partitionBy(col("__key")).orderBy(monotonically_increasing_id())
-    keyed
-      .withColumn("__rn", row_number().over(byKey))
-      .withColumn("__batch", floor((col("__rn") - 1) / batchSize))
-      .groupBy(col("__key"), col("__batch"))
-      .agg(concat_ws(",", collect_list(col("__tuple"))).as("__vals"))
-      .select(concat(lit(s"INSERT INTO $table ($cols) VALUES "), col("__vals")).as("stmt"))
+    require(batchSize > 0, s"window.size (INSERT batch size) must be positive; got $batchSize")
+    val prefix = s"INSERT INTO $table (${df.columns.mkString(",")}) VALUES "
+    val parts = df.sparkSession.sparkContext.defaultParallelism
+    df.withColumn("__key", keyExpr)
+      .withColumn("__seq", monotonically_increasing_id())
+      .repartition(parts, col("__key"))
+      .select(col("__key"), col("__seq"), valuesTuple(df, targetTypes, dialect).as("__tuple"))
+      .sortWithinPartitions(col("__key"), col("__seq"))
+      .select(col("__key"), col("__tuple"))
+      .mapPartitions(rows => statements(rows, prefix, batchSize))(Encoders.STRING)
+      .toDF("stmt")
+  }
+
+  /** Cuts `(key, tuple)` rows sorted by key into statements of at most
+    * `batchSize` consecutive tuples of one key. Keys compare by value
+    * (`Objects.deepEquals`: strings, boxed numbers, nulls, binary).
+    * Lazy: holds one statement at a time. */
+  private def statements(rows: Iterator[Row], prefix: String,
+      batchSize: Int): Iterator[String] = new Iterator[String] {
+    private val in = rows.buffered
+    def hasNext: Boolean = in.hasNext
+    def next(): String = {
+      val first = in.next()
+      val key = first.get(0)
+      val sb = new java.lang.StringBuilder(prefix).append(first.getString(1))
+      var n = 1
+      while (n < batchSize && in.hasNext && java.util.Objects.deepEquals(in.head.get(0), key)) {
+        sb.append(',').append(in.next().getString(1))
+        n += 1
+      }
+      sb.toString
+    }
   }
 }

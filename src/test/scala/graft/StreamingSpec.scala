@@ -1,11 +1,14 @@
 package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.util.Properties
 
+import graft.config.PipelineConfig
 import graft.operators.Relational
+import graft.sinks.{BatchedRetrySink, SqlInsertFormatter, TestWriter}
 import graft.streaming.StreamingPipelines
 import graft.streaming.StreamingPipelines.EventRow
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType}
 import org.scalatest.funsuite.AnyFunSuite
@@ -1017,6 +1020,80 @@ class SinkSpec extends AnyFunSuite {
       .insertStatements(df, "t", lit(0), 10, targetTypes = types)
       .head.getString(0)
     assert(stmt === raw"INSERT INTO t (amount,code,tag) VALUES (42,'7','x\'y')")
+  }
+
+  /** 3,000 rows over 6 source partitions with string, numeric and
+    * partly-null key columns of 97, 89 and 13 (+ null) values. */
+  private def manyKeys(): DataFrame =
+    spark.range(0, 3000, 1, 6).select(
+      col("id"),
+      concat(lit("name-"), col("id")).as("name"),
+      concat(lit("k"), (col("id") * 7 % 97).cast("string")).as("k_str"),
+      (col("id") * 11 % 89).as("k_num"),
+      when(col("id") % 5 === 0, lit(null)).otherwise(col("id") % 13).as("k_null"))
+
+  /** Driver-side reference: the collected rows grouped by key in
+    * source order, each key's tuples cut every `batchSize`. */
+  private def reference(df: DataFrame, key: Column, batchSize: Int): Seq[String] = {
+    val prefix = s"INSERT INTO t (${df.columns.mkString(",")}) VALUES "
+    df.select(key.as("k"), SqlInsertFormatter.valuesTuple(df).as("t")).collect().toSeq
+      .groupBy(_.get(0)).values.toSeq
+      .flatMap(_.map(_.getString(1)).grouped(batchSize).map(ts => prefix + ts.mkString(",")))
+  }
+
+  private def statements(df: DataFrame, key: Column, batchSize: Int): Seq[String] =
+    SqlInsertFormatter.insertStatements(df, "t", key, batchSize).collect().map(_.getString(0)).toSeq
+
+  test("statement set: each key's rows in source order, cut every batchSize; deterministic") {
+    val df = manyKeys().cache()
+    try {
+      val keys = Seq(col("k_str"), col("k_num"), col("k_null"), spark_partition_id())
+      keys.foreach { key =>
+        val got = statements(df, key, 7)
+        val want = reference(df, key, 7)
+        assert(got.sorted === want.sorted, s"statement set differs for key $key")
+        assert(statements(df, key, 7) === got, s"second run differs for key $key")
+      }
+      // keys are compared by value: a string key's rows share statements
+      assert(statements(df, col("k_str"), 1000).size === 97)
+    } finally df.unpersist()
+  }
+
+  test("write fans out: one writer task per executor slot") {
+    val slots = spark.sparkContext.defaultParallelism
+    val df = manyKeys()
+    TestWriter.reset(failFirst = 0)
+    new BatchedRetrySink(TestWriter, maxRetries = 0, backoffMs = 1L)
+      .writeBatch("t", col("k_str"), 20)(df, batchId = 1L)
+    assert(TestWriter.statements.map(_.split("\\),\\(").length).sum === 3000)
+    assert(TestWriter.writerPartitions === (0 until slots).toSet,
+      s"writes ran in partitions ${TestWriter.writerPartitions}, not in all $slots slots")
+  }
+
+  test("a non-positive window or a malformed numeric property fails with its key") {
+    val e = intercept[IllegalArgumentException](
+      SqlInsertFormatter.insertStatements(manyKeys(), "t", col("k_str"), 0))
+    assert(e.getMessage.contains("window.size"))
+
+    val bad = Seq(
+      "window.size" -> "0",
+      "clickhouse.maxRetries" -> "three",
+      "clickhouse.retryBackoffMs" -> "-1",
+      "checkpoint.interval" -> "5s",
+      "kafka.maxOffsetsPerTrigger" -> "99999999999999999999")
+    bad.foreach { case (k, v) =>
+      val props = new Properties()
+      props.setProperty(k, v)
+      val err = intercept[IllegalArgumentException](PipelineConfig.fromProperties(props))
+      assert(err.getMessage.contains(k), s"$k=$v: ${err.getMessage}")
+    }
+
+    val props = new Properties()
+    props.setProperty("window.size", " 64 ")
+    props.setProperty("checkpoint.interval", "0")
+    val cfg = PipelineConfig.fromProperties(props)
+    assert(cfg.windowSize === 64 && cfg.triggerIntervalMs === 0L)
+    assert(PipelineConfig.fromProperties(new Properties()) === PipelineConfig())
   }
 
   test("streaming theta audience: out-of-order chunks + overlapping replay == batch (r9)") {
