@@ -7,7 +7,10 @@ import scala.jdk.CollectionConverters._
 /** Typed pipeline configuration — covers the reference's
   * `test.properties` surface (/root/reference/test.properties): Kafka
   * consumer, checkpoint/restart policy, sink target + retry, window
-  * size, required-field validation, string-typed columns.
+  * size, required-field validation. Keys of that surface with no
+  * reader here (`flink.env`, `state.backend`, `clickhouse.stringTypes`)
+  * are ignored like any unknown key: the sink's declared column types
+  * decide quoting, and the pipeline's query keeps no streaming state.
   */
 final case class PipelineConfig(
     // source
@@ -21,32 +24,13 @@ final case class PipelineConfig(
     // batching (reference `window.size`)
     windowSize: Int = 20,
     // checkpoint / restart (reference checkpoint.* / restart.*)
-    env: String = "test",
     checkpointLocation: String = "/tmp/graft-checkpoints",
     triggerIntervalMs: Long = 5000L,
     // sink (reference clickhouse.*)
     sinkDatabase: String = "sink",
     sinkTable: String = "events",
     sinkMaxRetries: Int = 3,
-    sinkRetryBackoffMs: Long = 100L,
-    stringTypes: Set[String] = Set("string", "date", "datetime"),
-    // state backend (reference state.backend → Flink Fs/RocksDB state
-    // backends; Spark's analog is the streaming state store provider)
-    stateBackend: String = "hashmap") {
-
-  /** Session confs implied by this config. `rocksdb` selects Spark's
-    * RocksDB state store provider — at 100-TB keyed state the default
-    * in-memory HDFS-backed store holds every key's state on-heap;
-    * RocksDB keeps it off-heap with incremental snapshots, the same
-    * role RocksDBStateBackend plays in the reference. */
-  def sparkConfs: Map[String, String] = stateBackend.toLowerCase match {
-    case "rocksdb" => Map(
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
-    case _ => Map.empty
-  }
-}
+    sinkRetryBackoffMs: Long = 100L)
 
 object PipelineConfig {
 
@@ -78,16 +62,12 @@ object PipelineConfig {
       maxOffsetsPerTrigger = Some(long("kafka.maxOffsetsPerTrigger", "100000", 1)),
       requiredFields = getList("check.field", "cTime,essCode"),
       windowSize = int("window.size", "20", 1),
-      env = get("flink.env", get("env", "test")),
       checkpointLocation = get("checkpoint.path", "/tmp/graft-checkpoints"),
       triggerIntervalMs = long("checkpoint.interval", "5000", 0),
       sinkDatabase = get("clickhouse.database", "sink"),
       sinkTable = get("clickhouse.table", "events"),
       sinkMaxRetries = int("clickhouse.maxRetries", "3", 0),
-      sinkRetryBackoffMs = long("clickhouse.retryBackoffMs", "100", 0),
-      stringTypes = get("clickhouse.stringTypes", "String,Date,DateTime")
-        .split(",").map(_.trim.toLowerCase).toSet,
-      stateBackend = get("state.backend", "hashmap"))
+      sinkRetryBackoffMs = long("clickhouse.retryBackoffMs", "100", 0))
   }
 
   def fromFile(path: String): PipelineConfig = {

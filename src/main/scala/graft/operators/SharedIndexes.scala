@@ -74,6 +74,14 @@ object SharedIndexes {
     "dedup_cluster_labels" -> Seq("dedup_minhash_pairs"),
     "graph_und_edges" -> Seq("graph_trade_edges"))
 
+  /** The index-build pool width from `SPARK_GRAFT_BUILD_THREADS`
+    * (unset: 6); a value that is not a positive integer fails with the
+    * variable's name. */
+  private[graft] def buildThreads(raw: Option[String]): Int = raw.fold(6) { v =>
+    v.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+      s"SPARK_GRAFT_BUILD_THREADS must be a positive integer; got '$v'"))
+  }
+
   /** Force-build and materialize every shared index; returns each
     * index's name and row count (all deterministic corpus statistics).
     *
@@ -104,8 +112,7 @@ object SharedIndexes {
     // 19.6–20.7 s at 3 threads → 16.4–16.8 s at 6 (diminishing past
     // that — the dedup dependency chain bounds the usable width);
     // env-overridable for narrower boxes
-    val nThreads = math.max(1,
-      sys.env.getOrElse("SPARK_GRAFT_BUILD_THREADS", "6").toInt)
+    val nThreads = buildThreads(sys.env.get("SPARK_GRAFT_BUILD_THREADS"))
     val pool = java.util.concurrent.Executors.newFixedThreadPool(nThreads, r => {
       val t = new Thread(r, "graft-index-build"); t.setDaemon(true); t
     })

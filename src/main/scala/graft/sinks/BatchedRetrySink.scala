@@ -17,7 +17,8 @@ trait StatementWriter extends Serializable {
   *  - statement generation is distributed (SqlInsertFormatter);
   *  - writes run per-partition on executors, one task per executor
   *    slot, not on the driver;
-  *  - retry is per chunk with exponential backoff; exhausting retries
+  *  - retry is per chunk of at most `ChunkSize` (a fixed 4096)
+  *    statements with exponential backoff; exhausting retries
   *    rethrows, failing the task → Spark/Structured Streaming replays
   *    the batch.
   *
@@ -32,8 +33,7 @@ trait StatementWriter extends Serializable {
 class BatchedRetrySink(
     writer: StatementWriter,
     maxRetries: Int = 3,
-    backoffMs: Long = 100L,
-    chunkSize: Int = 4096) extends Serializable {
+    backoffMs: Long = 100L) extends Serializable {
 
   /** foreachBatch-compatible entry point: format + write one micro-batch.
     * `keyExpr` partitions the batching (reference keyBy(essCode)); each
@@ -44,7 +44,7 @@ class BatchedRetrySink(
     * AQE would fold the batch's small shuffle into a single task if
     * the partition count were left to it (see
     * [[SqlInsertFormatter.insertStatements]]). Statements stream
-    * through in chunks of `chunkSize` (the retry unit must be
+    * through in chunks of `ChunkSize` (the retry unit must be
     * replayable, so each chunk is materialized, but never the whole
     * partition). */
   def writeBatch(table: String, keyExpr: org.apache.spark.sql.Column, batchSize: Int,
@@ -54,9 +54,9 @@ class BatchedRetrySink(
     val stmts = SqlInsertFormatter.insertStatements(df, table, keyExpr, batchSize,
       targetTypes, dialect)
     val w = writer
-    val (retries, backoff, chunk) = (maxRetries, backoffMs, chunkSize)
+    val (retries, backoff) = (maxRetries, backoffMs)
     stmts.select("stmt").foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-      rows.map(_.getString(0)).grouped(chunk).foreach { group =>
+      rows.map(_.getString(0)).grouped(BatchedRetrySink.ChunkSize).foreach { group =>
         BatchedRetrySink.retryOnFailure(retries, backoff) {
           w.write(batchId, group.iterator)
         }
@@ -66,6 +66,10 @@ class BatchedRetrySink(
 }
 
 object BatchedRetrySink {
+  /** Statements per write call, the retry unit: a fixed bound on the
+    * statements a task holds to replay a failed chunk. */
+  private val ChunkSize = 4096
+
   /** Bounded retry with exponential backoff; rethrows after the last
     * attempt so the caller (task) fails loudly — unlike the reference,
     * which swallows the final failure and drops the batch. Fatal errors

@@ -63,7 +63,7 @@ object JdbcCatalogTypes {
   * bounded retry, then Spark's task retry).
   *
   * The statement chunk is materialized once so it can replay across
-  * URL attempts — chunk sizes are bounded by the sink's `chunkSize`,
+  * URL attempts — chunk sizes are bounded by the sink's fixed chunk size,
   * so this is an executor-memory-bounded buffer, not a partition
   * materialization.
   */

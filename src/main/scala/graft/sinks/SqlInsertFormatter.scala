@@ -9,12 +9,15 @@ import org.apache.spark.sql.types._
   * numerics, NULL for missing) — but as codegen'd Column expressions
   * that run distributed, instead of per-record driver string work.
   *
-  * Two sources of type truth, mirroring the reference: the TARGET
-  * table's declared column types (MyWindowFunction looks them up from
-  * `system.columns`) decide quoting when supplied via `targetTypes`;
-  * the DataFrame schema is the fallback. A string df-column bound to a
-  * numeric target column is emitted raw/unquoted, and a numeric
-  * df-column bound to a String target is quoted — exactly the
+  * One formatter, driven by one type per column: the TARGET table's
+  * declared column type, as MyWindowFunction looks it up from
+  * `system.columns` and as `targetTypes` supplies it. A column with no
+  * catalog entry takes the type its Spark type implies (numerics and
+  * booleans unquoted, arrays by element type, anything else a quoted,
+  * escaped String). The Spark type only renders the value (timestamp
+  * and date formats), so a string df-column bound to a numeric target
+  * column is emitted raw/unquoted (numeric-shape-checked), and a
+  * numeric df-column bound to a String target is quoted — exactly the
   * reference's behavior.
   *
   * See [[SqlDialect]] for the escaping rules of the target engine;
@@ -63,24 +66,6 @@ object SqlInsertFormatter {
     case TimestampType | TimestampNTZType => date_format(c, "yyyy-MM-dd HH:mm:ss")
     case DateType => date_format(c, "yyyy-MM-dd")
     case _ => c.cast(StringType)
-  }
-
-  /** Literal-format one column according to its Spark type. */
-  def literal(c: Column, dt: DataType,
-      dialect: SqlDialect = SqlDialect.ClickHouseLike): Column = {
-    val formatted = dt match {
-      case StringType | TimestampType | TimestampNTZType | DateType =>
-        quoted(rendered(c, dt), dialect)
-      case at: ArrayType =>
-        // schema-driven array literal: element rules from the element type
-        val elemDeclared = at.elementType match {
-          case StringType | TimestampType | TimestampNTZType | DateType => "String"
-          case _ => "Int64"
-        }
-        arrayLiteral(c, at, elemDeclared, dialect)
-      case _ => rendered(c, dt)
-    }
-    coalesce(formatted, lit("NULL"))
   }
 
   /** Strip ClickHouse transparent wrappers — `Nullable(T)` /
@@ -198,16 +183,36 @@ object SqlInsertFormatter {
     }
   }
 
+  /** The declared type a column with no catalog entry takes, from its
+    * Spark type: numerics and booleans any unquoted type, arrays by
+    * element type, anything else (strings, dates, timestamps, structs,
+    * maps, binary) a quoted, escaped `String`. */
+  private def impliedType(dt: DataType): String = dt match {
+    case _: NumericType | BooleanType => "Int64"
+    case at: ArrayType => at.elementType match {
+      case StringType | TimestampType | TimestampNTZType | DateType => "Array(String)"
+      case _ => "Array(Int64)"
+    }
+    case _ => "String"
+  }
+
+  /** The declared type of `f`: its catalog entry, matched the way the
+    * target resolves an unquoted identifier — exact name first, then
+    * case-insensitive (Derby reports `topicName` as `TOPICNAME`) —
+    * else the type its Spark type implies. */
+  private def declaredType(targetTypes: Map[String, String], f: StructField): String =
+    targetTypes.get(f.name)
+      .orElse(targetTypes.collectFirst { case (k, t) if k.equalsIgnoreCase(f.name) => t })
+      .getOrElse(impliedType(f.dataType))
+
   /** Per-row `(v1,v2,...)` tuple column for the given DataFrame.
-    * `targetTypes` maps column name → declared sink type; columns
-    * absent from the map fall back to DataFrame-schema formatting. */
+    * `targetTypes` maps column name → declared sink type (see
+    * [[declaredType]] for the lookup and the type of an unlisted
+    * column). */
   def valuesTuple(df: DataFrame, targetTypes: Map[String, String] = Map.empty,
       dialect: SqlDialect = SqlDialect.ClickHouseLike): Column = {
     val parts = df.schema.fields.map { f =>
-      targetTypes.get(f.name) match {
-        case Some(t) => literalForTarget(col(f.name), f.dataType, t, dialect)
-        case None => literal(col(f.name), f.dataType, dialect)
-      }
+      literalForTarget(col(f.name), f.dataType, declaredType(targetTypes, f), dialect)
     }
     concat(lit("("), concat_ws(",", parts.toIndexedSeq: _*), lit(")"))
   }

@@ -25,14 +25,4 @@ object KafkaIngest {
     cfg.maxOffsetsPerTrigger.fold(reader)(n =>
       reader.option("maxOffsetsPerTrigger", n.toString)).load()
   }
-
-  /** Batch variant for reprocessing a topic range. */
-  def readBatch(spark: SparkSession, cfg: PipelineConfig): DataFrame =
-    spark.read
-      .format("kafka")
-      .option("kafka.bootstrap.servers", cfg.bootstrapServers)
-      .option("subscribe", cfg.topics.mkString(","))
-      .option("startingOffsets", "earliest")
-      .option("endingOffsets", "latest")
-      .load()
 }

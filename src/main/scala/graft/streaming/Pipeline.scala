@@ -43,46 +43,28 @@ object Pipeline {
       dirtySink: Option[(DataFrame, Long) => Unit] = None,
       // evaluated ONCE at sink open — the reference's system.columns
       // lookup slot (pass e.g. () => JdbcCatalogTypes.derby(...));
-      // default keeps the supplied-map behavior
+      // default: no catalog, every column takes its Spark-implied type
       targetTypes: () => Map[String, String] = () => Map.empty,
       dialect: SqlDialect = SqlDialect.ClickHouseLike): StreamingQuery = {
-    // config-selected state store provider (reference state.backend):
-    // a streaming query captures the session's SQLConf at start(), so
-    // the settings are applied just before start() and RESTORED right
-    // after — they must not silently re-point the state backend of
-    // every later query on the shared session. NOTE: the provider is
-    // also pinned into the query's own checkpoint; restarting an
-    // existing checkpoint under a DIFFERENT provider than it was
-    // created with is an incompatible state-format switch — keep
-    // cfg.sparkConfs stable across restarts of the same checkpoint.
-    val conf = kafkaShaped.sparkSession.conf
-    val prior: Map[String, Option[String]] =
-      cfg.sparkConfs.keys.map(k => k -> conf.getOption(k)).toMap
-    cfg.sparkConfs.foreach { case (k, v) => conf.set(k, v) }
-    try {
-      val sink = new BatchedRetrySink(writer, cfg.sinkMaxRetries, cfg.sinkRetryBackoffMs)
-      val types = targetTypes() // sink open: one catalog round-trip
-      val write = sink.writeBatch(
-        s"${cfg.sinkDatabase}.${cfg.sinkTable}", col(keyField), cfg.windowSize,
-        types, dialect) _
-      kafkaShaped.writeStream
-        .option("checkpointLocation", checkpoint)
-        .trigger(Trigger.ProcessingTime(cfg.triggerIntervalMs))
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // two downstream actions (dirty sink + insert write) — persist
-          // so the source read + JSON parse run once per trigger
-          batch.persist()
-          try {
-            val parsed = JsonIngest.parse(batch, schema, cfg)
-            dirtySink.foreach(f => f(parsed.dirty, batchId))
-            write(enrich(parsed.valid, tsField), batchId)
-          } finally batch.unpersist()
-        }
-        .start()
-    } finally prior.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None) => conf.unset(k)
-    }
+    val sink = new BatchedRetrySink(writer, cfg.sinkMaxRetries, cfg.sinkRetryBackoffMs)
+    val types = targetTypes() // sink open: one catalog round-trip
+    val write = sink.writeBatch(
+      s"${cfg.sinkDatabase}.${cfg.sinkTable}", col(keyField), cfg.windowSize,
+      types, dialect) _
+    kafkaShaped.writeStream
+      .option("checkpointLocation", checkpoint)
+      .trigger(Trigger.ProcessingTime(cfg.triggerIntervalMs))
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        // two downstream actions (dirty sink + insert write) — persist
+        // so the source read + JSON parse run once per trigger
+        batch.persist()
+        try {
+          val parsed = JsonIngest.parse(batch, schema, cfg)
+          dirtySink.foreach(f => f(parsed.dirty, batchId))
+          write(enrich(parsed.valid, tsField), batchId)
+        } finally batch.unpersist()
+      }
+      .start()
   }
 
   /** Production wiring: Kafka source from config (needs the kafka

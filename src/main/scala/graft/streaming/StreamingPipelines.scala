@@ -104,14 +104,6 @@ object StreamingPipelines {
       trigger: org.apache.spark.sql.streaming.Trigger =
         org.apache.spark.sql.streaming.Trigger.ProcessingTime(200L))(
       onBatch: (DataFrame, DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.IncrementalDedup
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.types._
-    val hashesSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("content_hash", StringType)))
-    val bandsSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("band", IntegerType),
-      StructField("sig", StringType)))
     docs.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
@@ -121,10 +113,6 @@ object StreamingPipelines {
       .start()
   }
 
-  /** One micro-batch of the incremental-dedup stream — package-visible
-    * so the replay-idempotence contract is directly testable (calling
-    * this twice with the SAME batchId must produce the same clean/dup
-    * routing and leave the index unchanged). */
   /** Read the persisted corpus index EXCLUDING `batchId`'s own
     * partition: a replayed batch must see the index exactly as it
     * stood before its first attempt, or every doc it wrote last time
@@ -156,6 +144,10 @@ object StreamingPipelines {
     newIndex.bands.write.mode("overwrite").parquet(s"$indexDir/bands/batch=$batchId")
   }
 
+  /** One micro-batch of the incremental-dedup stream — package-visible
+    * so the replay-idempotence contract is directly testable (calling
+    * this twice with the SAME batchId must produce the same clean/dup
+    * routing and leave the index unchanged). */
   private[graft] def processDedupBatch(batch: DataFrame, batchId: Long, indexDir: String)(
       onBatch: (DataFrame, DataFrame, Long) => Unit): Unit = {
     import graft.operators.IncrementalDedup

@@ -25,12 +25,20 @@ import graft.{CachedPlans, GraftSession, SparkEntry}
   * clears 0.5 s.
   */
 object ScaleCurve {
+  /** Splits a `<dir>x<mult>` argument at its last 'x'; an argument with
+    * no directory or no positive multiple fails with the usage line. */
+  private[graft] def scaleDir(arg: String): (String, Double) = {
+    val i = arg.lastIndexOf('x')
+    val mult = if (i > 0) arg.substring(i + 1).toDoubleOption else None
+    mult.filter(m => m > 0 && !m.isInfinite).map(m => (arg.substring(0, i), m))
+      .getOrElse(throw new IllegalArgumentException(
+        s"ScaleCurve: '$arg' is not <dir>x<positive multiple>; " +
+          "usage: ScaleCurve <dir>x<mult> ... [-- <op> ...]"))
+  }
+
   def main(args: Array[String]): Unit = {
     val (dirArgs, opArgs) = args.span(_ != "--")
-    val dirs: Seq[(String, Double)] = dirArgs.toSeq.map { a =>
-      val i = a.lastIndexOf('x')
-      (a.substring(0, i), a.substring(i + 1).toDouble)
-    }
+    val dirs: Seq[(String, Double)] = dirArgs.toSeq.map(scaleDir)
     val defaultOps = Seq(
       "dedup_candidate_index", "dedup_containment", "q_spearman",
       "sample_doremi", "knn_graph_search", "graph_triangles",

@@ -82,6 +82,24 @@ class BenchGateSpec extends AnyFunSuite {
     assert(graft.operators.SharedIndexes.drainBuildLog().isEmpty)
   }
 
+  test("a bad SPARK_GRAFT_BUILD_THREADS or ScaleCurve directory argument fails with its name") {
+    import graft.operators.SharedIndexes.buildThreads
+    import graft.tools.ScaleCurve.scaleDir
+    assert(buildThreads(None) === 6)
+    assert(buildThreads(Some(" 3 ")) === 3)
+    Seq("", "six", "0", "-2", "1.5", "99999999999").foreach { v =>
+      val e = intercept[IllegalArgumentException](buildThreads(Some(v)))
+      assert(e.getMessage.contains("SPARK_GRAFT_BUILD_THREADS"), s"'$v': ${e.getMessage}")
+    }
+    assert(scaleDir("/data/sf0.1x1") === ("/data/sf0.1", 1.0))
+    assert(scaleDir("/data/x3x2.5") === ("/data/x3", 2.5))
+    Seq("/data/sf0.1", "x3", "/data/sf0.1x", "/data/sf0.1xten", "/data/ax0", "/data/ax-1",
+      "/data/axNaN", "/data/axInfinity").foreach { a =>
+      val e = intercept[IllegalArgumentException](scaleDir(a))
+      assert(e.getMessage.contains("usage: ScaleCurve"), s"'$a': ${e.getMessage}")
+    }
+  }
+
   test("load sampler produces monotone-offset samples with sane fields") {
     val s = new Bench.LoadSampler(System.nanoTime(), periodMs = 50)
     Thread.sleep(200)

@@ -55,6 +55,17 @@ class CatalogSinkSpec extends AnyFunSuite {
     assert(back === Seq(
       (1L, "o'quinn", "2024-01-02 03:04:05.0", 1.5),
       (2L, "plain", "2024-02-03 04:05:06.0", -2.25)))
+
+    // lower- and mixed-case frame columns find Derby's upper-cased
+    // entries, so the string `Qty` bound to an INTEGER column goes in
+    // unquoted (Derby rejects a quoted value there)
+    exec("CREATE TABLE MC (ID BIGINT, QTY INTEGER, NOTE VARCHAR(20))")
+    val mixed = Seq((1L, "7", "a'b"), (2L, "-3", "c")).toDF("id", "Qty", "note")
+    sink.writeBatch("MC", spark_partition_id(), 10,
+      targetTypes = JdbcCatalogTypes.derby(url, "APP", "MC"), dialect = SqlDialect.Ansi)(mixed, 1L)
+    val mixedBack = readBack("MC").collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).sortBy(_._1).toSeq
+    assert(mixedBack === Seq((1L, 7, "a'b"), (2L, -3, "c")))
   }
 
   test("ClickHouse wrapped types: Nullable/LowCardinality unwrap, DateTime64 precision, Array literals") {

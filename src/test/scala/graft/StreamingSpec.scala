@@ -506,7 +506,10 @@ class StreamingSpec extends AnyFunSuite {
   test("count-batcher under RocksDB state store, state recovered across restart") {
     implicit val s = spark
     import s.implicits._
-    val rocks = graft.config.PipelineConfig(stateBackend = "rocksdb").sparkConfs
+    val rocks = Map(
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
     val prev = rocks.keys.map(k => k -> spark.conf.getOption(k)).toMap
     rocks.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
@@ -996,6 +999,16 @@ class SinkSpec extends AnyFunSuite {
       .insertStatements(df, "t", lit(0), 10)
       .head.getString(0)
     assert(stmt === raw"INSERT INTO t (id,name,score) VALUES (1,'o\'neil',3.5)")
+
+    // struct, map and binary columns with no catalog entry: each value
+    // is one quoted, escaped literal, never spliced raw
+    val hostile = Seq((1L, "x'),(1")).toDF("id", "s").select(col("id"),
+      struct(col("s")).as("st"), map(lit("k"), col("s")).as("mp"), col("s").cast("binary").as("bin"))
+    val hostileStmt = graft.sinks.SqlInsertFormatter
+      .insertStatements(hostile, "t", lit(0), 10)
+      .head.getString(0)
+    assert(hostileStmt ===
+      raw"INSERT INTO t (id,st,mp,bin) VALUES (1,'{x\'),(1}','{k -> x\'),(1}','x\'),(1')", hostileStmt)
   }
 
   test("SqlInsertFormatter escapes control characters in string literals") {

@@ -70,12 +70,21 @@ class SourcesSpec extends AnyFunSuite {
     props.setProperty("window.size", "5")
     props.setProperty("check.field", "cTime,essCode")
     props.setProperty("clickhouse.maxRetries", "7")
-    props.setProperty("clickhouse.stringTypes", "String,Date,DateTime")
     val cfg = graft.config.PipelineConfig.fromProperties(props)
     assert(cfg.topics === Seq("a", "b"))
     assert(cfg.windowSize === 5)
     assert(cfg.requiredFields === Seq("cTime", "essCode"))
     assert(cfg.sinkMaxRetries === 7)
-    assert(cfg.stringTypes === Set("string", "date", "datetime"))
+
+    // keys of the reference file that nothing reads still load
+    props.setProperty("state.backend", "rocksdb")
+    props.setProperty("clickhouse.stringTypes", "String,Date,DateTime")
+    props.setProperty("flink.env", "prod")
+    val file = java.nio.file.Files.createTempFile("graft-pipeline", ".properties")
+    try {
+      val out = java.nio.file.Files.newOutputStream(file)
+      try props.store(out, null) finally out.close()
+      assert(graft.config.PipelineConfig.fromFile(file.toString) === cfg)
+    } finally java.nio.file.Files.delete(file)
   }
 }
