@@ -125,11 +125,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.cpus(sys.env.get("SPARK_GRAFT_CPUS"), 4)
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
       .filter(_.nonEmpty)
-    val spark: SparkSession = GraftSession.builder(s"local[$cpus]", cpus.toInt)
+    val spark: SparkSession = GraftSession.builder(s"local[$cpus]", cpus)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -8,8 +8,8 @@ object Dev {
     val opName = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val mode = if (args.length > 2) args(2) else "time"
-    val spark = GraftSession.builder(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt).getOrCreate()
+    val cpus = GraftSession.cpus(sys.env.get("SPARK_GRAFT_CPUS"), 32)
+    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     if (mode == "explain") SparkEntry.queries(opName)(spark, sfDir).explain("formatted")
     else if (mode == "plan") {

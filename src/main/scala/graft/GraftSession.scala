@@ -84,6 +84,19 @@ object GraftSession {
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.ui.enabled", "false")
 
+  /** The positive integer in `raw`, the value of environment variable
+    * `name` (unset: `default`); any other value fails with the
+    * variable's name. */
+  private[graft] def positiveInt(name: String, raw: Option[String], default: Int): Int =
+    raw.fold(default) { v =>
+      v.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+        s"$name must be a positive integer; got '$v'"))
+    }
+
+  /** The local core count from `SPARK_GRAFT_CPUS` (unset: `default`). */
+  private[graft] def cpus(raw: Option[String], default: Int): Int =
+    positiveInt("SPARK_GRAFT_CPUS", raw, default)
+
   def getOrCreate(): SparkSession = {
     val s = builder().getOrCreate()
     s.sparkContext.setLogLevel("WARN")

@@ -18,8 +18,8 @@ object Verify {
     // ops without re-running the whole surface (driver passes 2 args)
     val only: Option[Set[String]] = args.lift(2).map(_.split(",").toSet)
     def keep(name: String): Boolean = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark: SparkSession = GraftSession.builder(s"local[$cpus]", cpus.toInt)
+    val cpus = GraftSession.cpus(sys.env.get("SPARK_GRAFT_CPUS"), 4)
+    val spark: SparkSession = GraftSession.builder(s"local[$cpus]", cpus)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

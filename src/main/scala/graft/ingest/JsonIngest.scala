@@ -17,7 +17,10 @@ import org.apache.spark.sql.types.StructType
   */
 object JsonIngest {
 
-  final case class Parsed(valid: DataFrame, dirty: DataFrame)
+  /** `valid` and `dirty` are the two filters of `flat`, the frame
+    * after `from_json` and the metadata columns: persisting `flat`
+    * makes one parse serve both. */
+  final case class Parsed(valid: DataFrame, dirty: DataFrame, flat: DataFrame)
 
   /** Parse `value` (JSON bytes/string) with `schema`, inject source
     * metadata columns (reference injects topicName/topicOffset/
@@ -29,15 +32,21 @@ object JsonIngest {
       .withColumn("topicPartition", col("partition"))
       .withColumn("topicOffset", col("offset"))
       .withColumn("topicGroupId", lit(cfg.groupId))
-    val required: Column = cfg.requiredFields
-      .map(f => col(s"payload.$f").isNotNull)
-      .reduceOption(_ && _).getOrElse(lit(true))
     val flat = parsed.select(
       (schema.fieldNames.map(f => col(s"payload.$f").as(f)) ++
         Seq(col("topicName"), col("topicPartition"), col("topicOffset"), col("topicGroupId"))
         ).toIndexedSeq: _*)
+    // on flat's own columns (`f` is `payload.f`): a filter naming
+    // `payload` would make the analyzer re-project it under the filter,
+    // and that plan no longer matches a persisted `flat`
+    cfg.requiredFields.foreach(f => require(schema.fieldNames.contains(f.takeWhile(_ != '.')),
+      s"check.field names '$f', which is not a field of the payload schema"))
+    val required: Column = cfg.requiredFields
+      .map(f => col(f).isNotNull)
+      .reduceOption(_ && _).getOrElse(lit(true))
     Parsed(
       valid = flat.filter(required),
-      dirty = flat.filter(!required))
+      dirty = flat.filter(!required),
+      flat = flat)
   }
 }

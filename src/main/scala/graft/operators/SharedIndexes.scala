@@ -77,10 +77,8 @@ object SharedIndexes {
   /** The index-build pool width from `SPARK_GRAFT_BUILD_THREADS`
     * (unset: 6); a value that is not a positive integer fails with the
     * variable's name. */
-  private[graft] def buildThreads(raw: Option[String]): Int = raw.fold(6) { v =>
-    v.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
-      s"SPARK_GRAFT_BUILD_THREADS must be a positive integer; got '$v'"))
-  }
+  private[graft] def buildThreads(raw: Option[String]): Int =
+    graft.GraftSession.positiveInt("SPARK_GRAFT_BUILD_THREADS", raw, 6)
 
   /** Force-build and materialize every shared index; returns each
     * index's name and row count (all deterministic corpus statistics).

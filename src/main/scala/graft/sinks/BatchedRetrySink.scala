@@ -36,9 +36,10 @@ class BatchedRetrySink(
     backoffMs: Long = 100L) extends Serializable {
 
   /** foreachBatch-compatible entry point: format + write one micro-batch.
-    * `keyExpr` partitions the batching (reference keyBy(essCode)); each
-    * statement holds at most `batchSize` rows of one key, in source
-    * order. Formatting costs one hash exchange on the key into
+    * `keyExpr` partitions the batching (reference keyBy(essCode)); a
+    * window is at most `batchSize` rows of one key, in source order,
+    * and each statement holds whole windows packed up to `batchSize`
+    * rows. Formatting costs one hash exchange on the key into
     * `defaultParallelism` partitions and one sort per partition, and
     * the write runs in the same tasks: one per executor slot, since
     * AQE would fold the batch's small shuffle into a single task if

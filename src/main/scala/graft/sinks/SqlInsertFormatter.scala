@@ -217,12 +217,16 @@ object SqlInsertFormatter {
     concat(lit("("), concat_ws(",", parts.toIndexedSeq: _*), lit(")"))
   }
 
-  /** Batch the rows of `df` into multi-row INSERT statements: each
-    * holds at most `batchSize` consecutive rows of one key, taken in
-    * source order. Output: one row per statement, column `stmt`, in
-    * `defaultParallelism` partitions, so a writer over them runs one
-    * task per executor slot. The statement set is a deterministic
-    * function of the input's rows and partitioning.
+  /** Batch the rows of `df` into multi-row INSERT statements of whole
+    * per-key windows. A window is at most `batchSize` consecutive rows
+    * of one key, taken in source order (the reference's
+    * `countWindow(window.size)`); a statement holds whole windows,
+    * packed up to `batchSize` rows, so a full window is a statement of
+    * its own and a key's window never spans two statements. Output:
+    * one row per statement, column `stmt`, in `defaultParallelism`
+    * partitions, so a writer over them runs one task per executor
+    * slot. The statement set is a deterministic function of the
+    * input's rows and partitioning.
     *
     * One shuffle, one sort. The key and the source order (`__seq`) are
     * stamped before the exchange: a nondeterministic `keyExpr` such as
@@ -233,8 +237,8 @@ object SqlInsertFormatter {
     * which would serialize the formatting and every write of the
     * batch; AQE keeps an explicit count. After the exchange the VALUES
     * tuples are formatted, each partition is sorted by (key, source
-    * order), and a streaming chunker cuts the statements, holding one
-    * at a time. */
+    * order), and a streaming chunker cuts the windows and packs the
+    * statements, holding one statement and one window at a time. */
   def insertStatements(df: DataFrame, table: String, keyExpr: Column, batchSize: Int,
       targetTypes: Map[String, String] = Map.empty,
       dialect: SqlDialect = SqlDialect.ClickHouseLike): DataFrame = {
@@ -251,22 +255,37 @@ object SqlInsertFormatter {
       .toDF("stmt")
   }
 
-  /** Cuts `(key, tuple)` rows sorted by key into statements of at most
-    * `batchSize` consecutive tuples of one key. Keys compare by value
-    * (`Objects.deepEquals`: strings, boxed numbers, nulls, binary).
-    * Lazy: holds one statement at a time. */
+  /** Cuts `(key, tuple)` rows sorted by key into windows of at most
+    * `batchSize` consecutive tuples of one key, and packs consecutive
+    * whole windows into statements of at most `batchSize` tuples
+    * (next fit: a window that does not fit starts the next statement).
+    * Keys compare by value (`Objects.deepEquals`: strings, boxed
+    * numbers, nulls, binary). Lazy: holds one statement and one window
+    * at a time. */
   private def statements(rows: Iterator[Row], prefix: String,
       batchSize: Int): Iterator[String] = new Iterator[String] {
     private val in = rows.buffered
-    def hasNext: Boolean = in.hasNext
-    def next(): String = {
+    private val window = new java.util.ArrayList[String]()
+
+    private def cutWindow(): Unit = {
       val first = in.next()
       val key = first.get(0)
-      val sb = new java.lang.StringBuilder(prefix).append(first.getString(1))
-      var n = 1
-      while (n < batchSize && in.hasNext && java.util.Objects.deepEquals(in.head.get(0), key)) {
-        sb.append(',').append(in.next().getString(1))
-        n += 1
+      window.add(first.getString(1))
+      while (window.size < batchSize && in.hasNext && java.util.Objects.deepEquals(in.head.get(0), key))
+        window.add(in.next().getString(1))
+    }
+
+    def hasNext: Boolean = !window.isEmpty || in.hasNext
+    def next(): String = {
+      if (window.isEmpty) cutWindow()
+      val sb = new java.lang.StringBuilder(prefix)
+      var n = 0
+      while (!window.isEmpty && n + window.size <= batchSize) {
+        if (n > 0) sb.append(',')
+        sb.append(String.join(",", window))
+        n += window.size
+        window.clear()
+        if (in.hasNext) cutWindow()
       }
       sb.toString
     }

@@ -55,14 +55,15 @@ object Pipeline {
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.ProcessingTime(cfg.triggerIntervalMs))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // two downstream actions (dirty sink + insert write) — persist
-        // so the source read + JSON parse run once per trigger
-        batch.persist()
+        // two downstream actions (dirty sink + insert write) filter the
+        // one parsed frame — persist it so the source read + JSON parse
+        // run once per trigger
+        val parsed = JsonIngest.parse(batch, schema, cfg)
+        parsed.flat.persist()
         try {
-          val parsed = JsonIngest.parse(batch, schema, cfg)
           dirtySink.foreach(f => f(parsed.dirty, batchId))
           write(enrich(parsed.valid, tsField), batchId)
-        } finally batch.unpersist()
+        } finally parsed.flat.unpersist()
       }
       .start()
   }

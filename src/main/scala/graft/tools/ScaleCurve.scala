@@ -52,8 +52,8 @@ object ScaleCurve {
     val ops = if (opArgs.length > 1) opArgs.toSeq.drop(1) else defaultOps
     val unknown = ops.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown ops: ${unknown.mkString(",")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark: SparkSession = GraftSession.builder(s"local[$cpus]", cpus.toInt)
+    val cpus = GraftSession.cpus(sys.env.get("SPARK_GRAFT_CPUS"), 32)
+    val spark: SparkSession = GraftSession.builder(s"local[$cpus]", cpus)
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000000).selectExpr("sum(id)").collect()

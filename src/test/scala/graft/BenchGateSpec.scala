@@ -100,6 +100,15 @@ class BenchGateSpec extends AnyFunSuite {
     }
   }
 
+  test("a bad SPARK_GRAFT_CPUS fails with its name") {
+    assert(GraftSession.cpus(None, 32) === 32)
+    assert(GraftSession.cpus(Some(" 8 "), 4) === 8)
+    Seq("", "eight", "0", "-4", "2.5", "*", "4]", "99999999999").foreach { v =>
+      val e = intercept[IllegalArgumentException](GraftSession.cpus(Some(v), 4))
+      assert(e.getMessage.contains("SPARK_GRAFT_CPUS"), s"'$v': ${e.getMessage}")
+    }
+  }
+
   test("load sampler produces monotone-offset samples with sane fields") {
     val s = new Bench.LoadSampler(System.nanoTime(), periodMs = 50)
     Thread.sleep(200)

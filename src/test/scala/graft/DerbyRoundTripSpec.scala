@@ -46,6 +46,39 @@ class DerbyRoundTripSpec extends AnyFunSuite {
       "values read back from Derby must equal the source rows exactly")
   }
 
+  test("packed whole windows over many keys land every row once, in few statements per partition") {
+    import spark.implicits._
+    exec("CREATE TABLE MK (ID BIGINT, K VARCHAR(16), NAME VARCHAR(40))")
+    // 3 hot keys of 100 rows (full windows) and 397 cold keys of ~7
+    val rows = (0 until 3000).map { i =>
+      val k = if (i % 10 == 0) s"hot-${i % 3}" else s"k${i % 397}"
+      (i.toLong, k, s"it's row $i")
+    }
+    val df = rows.toDF("ID", "K", "NAME").repartition(5)
+    val n = 20
+    new BatchedRetrySink(new JdbcStatementWriter(url), maxRetries = 1, backoffMs = 5L)
+      .writeBatch("MK", col("K"), n, dialect = SqlDialect.Ansi)(df, 0L)
+    val back = spark.read.format("jdbc")
+      .option("url", url).option("dbtable", "MK")
+      .option("driver", "org.apache.derby.iapi.jdbc.AutoloadedDriver")
+      .load()
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2)))
+      .sortBy(_._1).toSeq
+    assert(back === rows, "Derby must hold exactly the input rows: no loss, no duplicates")
+
+    // next fit: any two consecutive statements of a partition hold more
+    // than n rows, so a partition of r rows has fewer than 2r/n + 1
+    val perPartition = SqlInsertFormatter.insertStatements(df, "MK", col("K"), n,
+        dialect = SqlDialect.Ansi)
+      .select(spark_partition_id(), col("stmt")).collect()
+      .groupBy(_.getInt(0)).values
+      .map(ss => (ss.length, ss.map(_.getString(1).split("\\),\\(").length).sum))
+    assert(perPartition.map(_._2).sum === rows.length)
+    perPartition.foreach { case (stmts, r) =>
+      assert(stmts < 2.0 * r / n + 1, s"$stmts statements for $r rows at window $n")
+    }
+  }
+
   test("numeric-target guard survives a real parser: hostile string under numeric type → NULL row value") {
     import spark.implicits._
     exec("CREATE TABLE NG (ID BIGINT, AMOUNT DOUBLE)")

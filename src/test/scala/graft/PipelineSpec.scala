@@ -86,6 +86,43 @@ class PipelineSpec extends AnyFunSuite {
     assert(graft.sinks.TestWriter.statements.head.contains("dayOfYear"))
   }
 
+  test("one parse per trigger: dirty routing and the write both read the persisted parse") {
+    val cfg = PipelineConfig(requiredFields = Seq("user_id", "ts"), windowSize = 20,
+      sinkRetryBackoffMs = 1L)
+    val batch = kafkaShapedBatch().filter(col("offset") < 200)
+    val parsed = graft.ingest.JsonIngest.parse(batch, payloadSchema, cfg)
+    parsed.flat.persist()
+    try Seq(parsed.valid, parsed.dirty).foreach { df =>
+      assert(df.queryExecution.withCachedData.toString.contains("InMemoryRelation"),
+        df.queryExecution.withCachedData.toString)
+    } finally parsed.flat.unpersist()
+
+    // the streaming source counts every read of a trigger's rows: a
+    // second parse would read the source again and double the count
+    val srcDir = Files.createTempDirectory("graft-pipe-once-src")
+    writeSlice(srcDir, batch, "a")
+    graft.sinks.TestWriter.reset(failFirst = 0)
+    val dirtyRows = new java.util.concurrent.atomic.AtomicLong()
+    val q = Pipeline.runFromSource(
+      spark.readStream.schema(batch.schema).parquet(srcDir.toString),
+      payloadSchema, cfg, graft.sinks.TestWriter,
+      tsField = "ts", keyField = "user_id",
+      checkpoint = Files.createTempDirectory("graft-pipe-once-ckpt").toString,
+      dirtySink = Some((df, _) => dirtyRows.addAndGet(df.count())))
+    try q.processAllAvailable() finally q.stop()
+    assert(q.recentProgress.map(_.numInputRows).sum === batch.count())
+    assert(dirtyRows.get() === batch.filter(isDirty).count())
+    assert(tupleCount(graft.sinks.TestWriter.statements) === batch.filter(!isDirty).count())
+  }
+
+  test("a check.field outside the payload schema fails with its key, even one naming a metadata column") {
+    Seq("nope", "topicName").foreach { f =>
+      val e = intercept[IllegalArgumentException](graft.ingest.JsonIngest.parse(
+        kafkaShapedBatch(), payloadSchema, PipelineConfig(requiredFields = Seq(f))))
+      assert(e.getMessage.contains("check.field") && e.getMessage.contains(f), e.getMessage)
+    }
+  }
+
   test("full reference flow lands in embedded Derby: catalog-typed failover sink, dead first replica") {
     // the reference end-to-end: stream → parse/validate/enrich → keyed
     // batches → INSERTs executed against a LIVE SQL engine, with the

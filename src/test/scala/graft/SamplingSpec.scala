@@ -54,6 +54,16 @@ class SamplingSpec extends AnyFunSuite {
     assert(enFrac > 0.1 && enFrac < 0.4, s"en fraction $enFrac not ~0.25")
   }
 
+  test("sample_doremi on an empty documents table: no rows, same schema") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-empty-docs").toString
+    graft.sources.Tables.documents(spark, sf).limit(0)
+      .write.parquet(s"$dir/documents.parquet")
+    val want = SparkEntry.queries("sample_doremi")(spark, sf).schema
+    val got = SparkEntry.queries("sample_doremi")(spark, dir)
+    assert(got.schema === want)
+    assert(got.collect().isEmpty)
+  }
+
   test("sample_doremi: weights normalize, and harder domains never get less weight") {
     val rows = SparkEntry.queries("sample_doremi")(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(2), r.getLong(3))) // (source, deficit, weight)

@@ -1045,13 +1045,35 @@ class SinkSpec extends AnyFunSuite {
       (col("id") * 11 % 89).as("k_num"),
       when(col("id") % 5 === 0, lit(null)).otherwise(col("id") % 13).as("k_null"))
 
-  /** Driver-side reference: the collected rows grouped by key in
-    * source order, each key's tuples cut every `batchSize`. */
+  /** Spark's ascending key order: nulls first, then by value. */
+  private val keyOrder: Ordering[Any] = (a: Any, b: Any) => (a, b) match {
+    case (null, null) => 0
+    case (null, _) => -1
+    case (_, null) => 1
+    case (x: Comparable[Any] @unchecked, y) => x.compareTo(y)
+  }
+
+  /** Driver-side reference of the statement contract: each row goes to
+    * the partition its key hashes to, a partition is sorted by (key,
+    * source order), each key's rows are cut into windows of
+    * `batchSize`, and consecutive whole windows are packed next-fit
+    * into statements of at most `batchSize` tuples. */
   private def reference(df: DataFrame, key: Column, batchSize: Int): Seq[String] = {
     val prefix = s"INSERT INTO t (${df.columns.mkString(",")}) VALUES "
-    df.select(key.as("k"), SqlInsertFormatter.valuesTuple(df).as("t")).collect().toSeq
-      .groupBy(_.get(0)).values.toSeq
-      .flatMap(_.map(_.getString(1)).grouped(batchSize).map(ts => prefix + ts.mkString(",")))
+    val parts = spark.sparkContext.defaultParallelism
+    df.select(key.as("k"), SqlInsertFormatter.valuesTuple(df).as("t"))
+      .select(pmod(hash(col("k")), lit(parts)).as("p"), col("k"), col("t"))
+      .collect().toSeq // source order
+      .groupBy(_.getInt(0)).values.toSeq
+      .flatMap { part =>
+        val byKey = part.groupBy(_.get(1))
+        val windows = byKey.keys.toSeq.sorted(keyOrder)
+          .flatMap(k => byKey(k).map(_.getString(2)).grouped(batchSize))
+        windows.foldLeft(Vector.empty[Seq[String]]) { (stmts, w) =>
+          if (stmts.nonEmpty && stmts.last.size + w.size <= batchSize) stmts.init :+ (stmts.last ++ w)
+          else stmts :+ w
+        }.map(ts => prefix + ts.mkString(","))
+      }
   }
 
   private def statements(df: DataFrame, key: Column, batchSize: Int): Seq[String] =
@@ -1067,8 +1089,22 @@ class SinkSpec extends AnyFunSuite {
         assert(got.sorted === want.sorted, s"statement set differs for key $key")
         assert(statements(df, key, 7) === got, s"second run differs for key $key")
       }
-      // keys are compared by value: a string key's rows share statements
-      assert(statements(df, col("k_str"), 1000).size === 97)
+      // the contract on the statements themselves; keys compare by value
+      def ids(stmt: String): Seq[Long] =
+        stmt.split("\\),\\(").toSeq.map(t => t.substring(t.lastIndexOf('(') + 1).takeWhile(_ != ',').toLong)
+      for (k <- Seq("k_str", "k_num", "k_null"); n <- Seq(7, 1000)) {
+        val stmts = statements(df, col(k), n).map(ids)
+        assert(stmts.forall(_.size <= n), s"$k/$n: a statement holds more than $n tuples")
+        assert(stmts.flatten.sorted === (0L until 3000L), s"$k/$n: rows lost or duplicated")
+        val rowsOfKey = df.select(col(k), col("id")).collect().toSeq
+          .groupBy(_.get(0)).values.map(_.map(_.getLong(1)).sorted)
+        rowsOfKey.foreach(_.grouped(n).foreach { w =>
+          assert(stmts.count(_.containsSlice(w)) === 1,
+            s"$k/$n: window ${w.head}.. is not contiguous, in source order, in one statement")
+          if (w.size == n)
+            assert(stmts.contains(w), s"$k/$n: full window ${w.head}.. is not a statement of its own")
+        })
+      }
     } finally df.unpersist()
   }
 
