@@ -42,10 +42,13 @@ import org.apache.spark.storage.StorageLevel
   * blocks died with the context; nothing to unpersist). A session
   * forked off a still-running context (`newSession()`) pins its
   * entries until [[clear]]; that is the documented contract, not a
-  * weak-map claim the value graph silently voids. Entry insertion is
-  * putIfAbsent-shaped so a racing builder unpersists its losing copy
-  * instead of leaking an unreferenced persisted plan in the
-  * CacheManager.
+  * weak-map claim the value graph silently voids.
+  *
+  * Builds are single-flight per (session, key): the first caller of a
+  * missing key builds and persists it, and concurrent callers of the
+  * same key wait for that frame. Two racing builders would otherwise
+  * persist the same plan twice, and the loser's `unpersist` would
+  * match the winner's cached data by `sameResult` and evict it.
   */
 object CachedPlans {
 
@@ -104,35 +107,49 @@ object CachedPlans {
       key: String): Option[DataFrame] =
     m.remove(key).map { df => m.update(key, df); df }
 
-  /** Get-or-build the persisted plan for `key` in this session. */
+  // The builds under way: (session, key) → the frame its builder will
+  // deliver to the callers that arrive meanwhile.
+  private val building = new java.util.concurrent.ConcurrentHashMap[
+    (SparkSession, String), java.util.concurrent.CompletableFuture[DataFrame]]()
+
+  /** Get-or-build the persisted plan for `key` in this session; one
+    * build per key at a time (see the class note). */
   def cached(s: SparkSession, key: String)(build: => DataFrame): DataFrame = {
     val m = sessionMap(s)
-    m.synchronized(touch(m, key)) match {
-      case Some(df) => df
-      case None =>
-        val cap = maxFrames(s) // validate confs BEFORE building
-        val level = storageLevel(s)
-        val built = build.persist(level) // build outside the lock; race resolved below
-        val (prior, evicted) = m.synchronized {
-          val p = touch(m, key)
-          if (p.isEmpty) m.update(key, built)
-          // shed least-recently-used frames beyond the cap (never the
-          // entry just inserted — it is at the tail by construction)
-          val ev = scala.collection.mutable.ListBuffer.empty[DataFrame]
-          while (m.size > cap) {
-            val lru = m.head._1
-            m.remove(lru).foreach(ev += _)
-          }
-          (p, ev.toList)
-        }
-        evicted.foreach(_.unpersist(blocking = false))
-        prior match {
-          case Some(winner) =>
-            built.unpersist(blocking = false) // lost the race: release our copy
-            winner
-          case None => built
-        }
+    m.synchronized(touch(m, key)).getOrElse {
+      val mine = new java.util.concurrent.CompletableFuture[DataFrame]()
+      val running = building.putIfAbsent((s, key), mine)
+      if (running != null) {
+        try running.get() // another thread is building this key
+        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+      } else {
+        try {
+          // the previous builder may have finished between lookup and latch
+          val df = m.synchronized(touch(m, key)).getOrElse(persistNew(s, m, key, build))
+          mine.complete(df)
+          df
+        } catch {
+          case e: Throwable => mine.completeExceptionally(e); throw e
+        } finally building.remove((s, key), mine)
+      }
     }
+  }
+
+  /** Persist a freshly built frame under `key`, shedding least-recently-
+    * used frames beyond the cap (never the new entry: it is at the tail). */
+  private def persistNew(s: SparkSession,
+      m: scala.collection.mutable.LinkedHashMap[String, DataFrame],
+      key: String, build: => DataFrame): DataFrame = {
+    val cap = maxFrames(s) // validate confs BEFORE building
+    val built = build.persist(storageLevel(s))
+    val evicted = m.synchronized {
+      m.update(key, built)
+      val ev = scala.collection.mutable.ListBuffer.empty[DataFrame]
+      while (m.size > cap) m.remove(m.head._1).foreach(ev += _)
+      ev.toList
+    }
+    evicted.foreach(_.unpersist(blocking = false))
+    built
   }
 
   // Session-scoped side-effect artifacts (temp-dir rewrites like the

@@ -21,7 +21,7 @@ object SparkEntry {
     Relational.ops ++ SqlSurface.ops ++ SqlSurface2.ops ++ SqlSurface3.ops ++
       TpchMore.ops ++ TpchMore2.ops ++ TpchMore3.ops ++ ModernSql.ops ++ EmbedOps.ops ++ EmbedOps2.ops ++
       EventsAnalytics.ops ++ PackOps.ops ++ CurationOps.ops ++ GraphOps.ops ++ GraphOps2.ops ++
-      EtlOps.ops ++ TextOps.ops ++ TextOps2.ops ++ TextOps3.ops ++ DedupOps.ops ++ CleanPipeline.ops ++ MmOps.ops ++ MmOps2.ops ++
+      EtlOps.ops ++ TextOps.ops ++ TextOps2.ops ++ TextOps3.ops ++ DedupOps.ops ++ CleanPipeline.ops ++ MmOps.ops ++
       KnnOps.ops ++ MipsOps.ops ++ FusionOps.ops ++ KllOps.ops ++ TopK.ops ++ Sampling.ops ++ RangeJoin.ops ++ JoinPrune.ops ++
       AffinityOps.ops ++ StatsOps.ops ++ StatsOps2.ops ++ StatsOps3.ops ++ StatsOps4.ops ++
       StatsOps5.ops ++ StatsOps6.ops ++ StatsOps7.ops ++ PrefOps.ops

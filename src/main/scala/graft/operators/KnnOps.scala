@@ -62,6 +62,14 @@ object KnnOps {
     * the whole LSH path is hash-checkable (r7b). */
   private[operators] val PlaneSeedBase = 2000
 
+  /** (vec_id, tbl, bucket) for every row of `df`: the bucket for table
+    * t is Σ_b [dot(vec, plane_tb) > 0]·2^b over the L×B md5-seeded ±1
+    * planes numbered from `seedBase` — all L buckets from one native
+    * kernel call per row. */
+  private[operators] def bucketize(df: DataFrame, vec: String, seedBase: Int): DataFrame =
+    df.select(col("vec_id"), posexplode(graft.functions.lsh_buckets(col(vec), seedBase, L, B)))
+      .toDF("vec_id", "tbl", "bucket")
+
   /** LSH-bucketed approximate top-k (random hyperplane signatures).
     *
     * The L signatures are computed per-row by ONE native expression
@@ -114,14 +122,8 @@ object KnnOps {
     }) { (s, d) =>
     val v = Tables.embeddings(s, d)
       .select(col("vec_id"), Exprs.vecAsDouble(col("embedding")).as("e"))
-    // bucket for table t = Σ_b [dot(e, plane_tb) > 0]·2^b — all L
-    // buckets from one native kernel call per row
-    def bucketize(df: DataFrame): DataFrame =
-      df.select(col("vec_id"),
-          posexplode(graft.functions.lsh_buckets(col("e"), PlaneSeedBase, L, B)))
-        .toDF("vec_id", "tbl", "bucket")
-    val corpusB = bucketize(v)
-    val queryB = bucketize(v.filter(col("vec_id") < 5))
+    val corpusB = bucketize(v, "e", PlaneSeedBase)
+    val queryB = bucketize(v.filter(col("vec_id") < 5), "e", PlaneSeedBase)
       .select(col("vec_id").as("query_id"), col("tbl"), col("bucket"))
     val cand = corpusB.join(broadcast(queryB), Seq("tbl", "bucket"))
       .filter(col("vec_id") =!= col("query_id"))
@@ -962,11 +964,7 @@ object KnnOps {
 
   private def knnGraphEdgesPlan(s: SparkSession, d: String): DataFrame = {
     val v = IvfIndex.corpus(s, d)
-    def bucketize(df: DataFrame): DataFrame =
-      df.select(col("vec_id"),
-          posexplode(graft.functions.lsh_buckets(col("u"), PlaneSeedBase, L, B)))
-        .toDF("vec_id", "tbl", "bucket")
-    val b = bucketize(v)
+    val b = bucketize(v, "u", PlaneSeedBase)
     val cand = b
       .join(b.select(col("vec_id").as("hi"), col("tbl"), col("bucket")),
         Seq("tbl", "bucket"))

@@ -40,8 +40,7 @@ object MipsOps {
   /** MIPS plane namespace (disjoint from knn_lsh's 2000 and
     * emb_project's 0..15): plane p = t·B + b seeds as 3000 + p. */
   private val SeedBase = 3000
-  private val L = 16
-  private val B = 4
+  import KnnOps.{B, L} // the table geometry KnnOps.bucketize hashes with
   private val DIM = 64
 
   /** Exact MIPS baseline: top-k by raw inner product. */
@@ -127,12 +126,8 @@ object MipsOps {
     val qaug = n2.filter(col("vec_id") < 5)
       .select(col("vec_id"),
         concat(col("e"), array(lit(0.0))).as("ea"))
-    def bucketize(df: DataFrame): DataFrame =
-      df.select(col("vec_id"),
-          posexplode(graft.functions.lsh_buckets(col("ea"), SeedBase, L, B)))
-        .toDF("vec_id", "tbl", "bucket")
-    val corpusB = bucketize(aug)
-    val queryB = bucketize(qaug)
+    val corpusB = KnnOps.bucketize(aug, "ea", SeedBase)
+    val queryB = KnnOps.bucketize(qaug, "ea", SeedBase)
       .select(col("vec_id").as("query_id"), col("tbl"), col("bucket"))
     val cand = corpusB.join(broadcast(queryB), Seq("tbl", "bucket"))
       .filter(col("vec_id") =!= col("query_id"))

@@ -8,6 +8,100 @@ import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import java.nio.charset.StandardCharsets.US_ASCII
+
+/** The byte kernel every container walker and builder in [[MmOps]]
+  * goes through: one decision, in one place, about how a blob is read
+  * and what "malformed" means.
+  *
+  * Reads are bounds-checked and unsigned. Offsets are `Long`, `u16` is
+  * an `Int` in [0, 65535] and `u32` a `Long` in [0, 2^32), so a size
+  * field is never negative and `offset + size` never wraps. A read
+  * that does not lie wholly inside the blob, or a failed [[need]],
+  * raises the kernel's private malformed signal; [[walk]] maps that
+  * signal, and only that signal, to `None`. So a walker returns `None`
+  * on any malformed input and never throws or loops: each walker loop
+  * either steps by an unsigned size plus a positive header length or
+  * counts to a bound read from the blob. */
+private[graft] object Bytes {
+
+  private object Malformed extends RuntimeException with scala.util.control.NoStackTrace
+
+  /** Raise the malformed signal (the walker's `None`). */
+  def malformed: Nothing = throw Malformed
+
+  /** A structural check: false means the blob is malformed. */
+  def need(ok: Boolean): Unit = if (!ok) throw Malformed
+
+  /** Run a walker body over `bytes`: `None` when any read or check
+    * inside it finds the blob malformed, else the body's own result. */
+  def walk[T](bytes: Array[Byte])(body: Reader => Option[T]): Option[T] =
+    try body(new Reader(bytes)) catch { case Malformed => None }
+
+  /** RIFF/IFF chunks are word-aligned: an odd payload is followed by one
+    * pad byte. */
+  def even(n: Long): Long = n + (n & 1)
+
+  /** Reads at absolute `Long` offsets of one blob. Every read is
+    * bounds-checked (outside the blob = malformed) and unsigned: `u8`
+    * and `u16*` give an `Int` ≥ 0, `u32*` a `Long` ≥ 0, so sizes added
+    * to offsets only ever move forward. */
+  final class Reader private[Bytes] (bytes: Array[Byte]) {
+    def length: Int = bytes.length
+
+    /** The index of `off` when [off, off + n) lies inside the blob. */
+    def at(off: Long, n: Long = 1): Int = {
+      need(off >= 0 && n >= 0 && off + n <= bytes.length)
+      off.toInt
+    }
+
+    def u8(off: Long): Int = bytes(at(off)) & 0xff
+    def u16le(off: Long): Int = { val i = at(off, 2); (bytes(i) & 0xff) | (bytes(i + 1) & 0xff) << 8 }
+    def u16be(off: Long): Int = { val i = at(off, 2); (bytes(i) & 0xff) << 8 | (bytes(i + 1) & 0xff) }
+    def u32le(off: Long): Long = u16le(off) | u16le(off + 2).toLong << 16
+    def u32be(off: Long): Long = u16be(off).toLong << 16 | u16be(off + 2)
+    /** Byte order chosen by the data (TIFF's II/MM). */
+    def u16(off: Long, le: Boolean): Int = if (le) u16le(off) else u16be(off)
+    def u32(off: Long, le: Boolean): Long = if (le) u32le(off) else u32be(off)
+    /** The raw 64 bits (a `Long` cannot hold them unsigned). */
+    def u64le(off: Long): Long = u32le(off) | u32le(off + 4) << 32
+    def u64be(off: Long): Long = u32be(off) << 32 | u32be(off + 4)
+    def ascii(off: Long, n: Int): String = new String(bytes, at(off, n), n, US_ASCII)
+    def fourcc(off: Long): String = ascii(off, 4)
+  }
+
+  /** Sequential blob builder, the writer twin of [[Reader]]: each put
+    * writes the low 8/16/32/64 bits of its argument in the named byte
+    * order, so a size written here reads back unsigned and unchanged. */
+  final class Writer {
+    private val out = new java.io.ByteArrayOutputStream()
+    def size: Int = out.size()
+    def u8(v: Int): Writer = { out.write(v); this }
+    def u16le(v: Int): Writer = u8(v).u8(v >> 8)
+    def u16be(v: Int): Writer = u8(v >> 8).u8(v)
+    def u32le(v: Long): Writer = u16le(v.toInt).u16le((v >> 16).toInt)
+    def u32be(v: Long): Writer = u16be((v >> 16).toInt).u16be(v.toInt)
+    def u64le(v: Long): Writer = u32le(v).u32le(v >> 32)
+    def u64be(v: Long): Writer = u32be(v >> 32).u32be(v)
+    def u16(v: Int, le: Boolean): Writer = if (le) u16le(v) else u16be(v)
+    def u32(v: Long, le: Boolean): Writer = if (le) u32le(v) else u32be(v)
+    def bytes(b: Array[Byte]): Writer = { out.write(b); this }
+    def zeros(n: Int): Writer = bytes(new Array[Byte](n))
+    def ascii(s: String): Writer = bytes(s.getBytes(US_ASCII))
+    /** `s` NUL-padded to a fixed-width field. */
+    def field(s: String, width: Int): Writer = {
+      require(s.length <= width, s"'$s' overflows a $width-byte field")
+      ascii(s).zeros(width - s.length)
+    }
+    /** The pad byte after an odd payload of `n` bytes ([[even]]). */
+    def pad(n: Long): Writer = if (n % 2 == 1) u8(0) else this
+    /** One RIFF chunk: fourcc, LE size, payload, pad. */
+    def chunk(id: String, payload: Array[Byte]): Writer =
+      ascii(id).u32le(payload.length).bytes(payload).pad(payload.length)
+    def toArray: Array[Byte] = out.toByteArray
+  }
+}
+
 /** Multimodal-column plumbing (SURVEY.md §2g).
   *
   * Media are opaque `binary` columns with typed metadata. IMAGE decode
@@ -17,6 +111,14 @@ import org.apache.spark.sql.types._
   * back to a clearly-marked deterministic STUB lane, with the Spark
   * side (schema, binary batching, mapPartitions decode, output shape)
   * identical for both.
+  *
+  * The container legs (WAV, MP4, JPEG, PNG, GIF, BMP, tar, zip, PDF,
+  * MP3, ID3, FLAC, Exif, WebP, Ogg, AVI, ICO, AIFF, SRT) share one
+  * contract: a deterministic blob per doc_id from the leg's builder, a
+  * strict walker that returns `None` on any malformed input and never
+  * throws or loops (the binary ones read through [[Bytes.walk]]),
+  * build+walk fused in one mapPartitions, and an oracle that replays
+  * the emitted metadata analytically from the id rule.
   */
 object MmOps {
 
@@ -28,6 +130,27 @@ object MmOps {
   // init runs wherever the kernel lambdas first call into this object
   // (driver and every executor JVM alike).
   javax.imageio.ImageIO.setUseCache(false)
+
+  import Bytes._
+
+  /** The one build → walk → Row runner: `f` maps each source row to a
+    * row of the `ddl` schema inside mapPartitions, so a blob is built
+    * and walked in the task that reads its document and never crosses
+    * a shuffle. The walkers it calls read through [[Bytes.walk]]
+    * (bounds-checked, unsigned sizes), so malformed bytes come back as
+    * `None`; on a planted blob that is a bug, and [[planted]] fails the
+    * query. */
+  private def rowsOf(src: DataFrame, ddl: String)(f: Row => Row): DataFrame =
+    src.mapPartitions(_.map(f))(RowEncoder.encoderFor(StructType.fromDDL(ddl)))
+
+  /** [[rowsOf]] in doc_id order: the shape of every per-document op. */
+  private def plantedWalk(src: DataFrame, ddl: String)(f: Row => Row): DataFrame =
+    rowsOf(src, ddl)(f).orderBy(col("doc_id"))
+
+  /** A planted blob comes from this object's own builder, so a walker
+    * that rejects it is a bug, not data: the query fails. */
+  private def planted[T](what: String, docId: Long)(parsed: Option[T]): T =
+    parsed.getOrElse(throw new IllegalStateException(s"unwalkable planted $what for doc $docId"))
 
   /** Binary ingest + metadata: text bytes stand in for media blobs. */
   val meta: GraftOp = GraftOp(
@@ -46,14 +169,6 @@ object MmOps {
         (lit(1) + h % 3).as("channels"))
       .orderBy(col("doc_id"))
   }
-
-  private val decodedSchema = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("n_bytes", IntegerType),
-    StructField("width", IntegerType),
-    StructField("height", IntegerType),
-    StructField("channels", IntegerType),
-    StructField("mean_luma", DoubleType)))
 
   private def isPng(b: Array[Byte]): Boolean =
     b.length >= 8 && b(0) == 0x89.toByte && b(1) == 'P' && b(2) == 'N' && b(3) == 'G'
@@ -141,16 +256,14 @@ object MmOps {
   def decodePipeline(spark: SparkSession, dir: String): DataFrame = {
     val blobs = Tables.documents(spark, dir)
       .select(col("doc_id"), encode(col("text"), "UTF-8").as("blob"))
-    val enc = RowEncoder.encoderFor(decodedSchema)
-    blobs.mapPartitions { rows =>
-      rows.map { r =>
-        val docId = r.getLong(0)
-        val bytes =
-          if (docId % 50 == 0) syntheticPng(docId) else r.getAs[Array[Byte]](1)
-        val (w, h, channels, luma) = decodeKernel(bytes)
-        Row(docId, bytes.length, w, h, channels, luma)
-      }
-    }(enc)
+    rowsOf(blobs,
+        "doc_id BIGINT, n_bytes INT, width INT, height INT, channels INT, mean_luma DOUBLE") { r =>
+      val docId = r.getLong(0)
+      val bytes =
+        if (docId % 50 == 0) syntheticPng(docId) else r.getAs[Array[Byte]](1)
+      val (w, h, channels, luma) = decodeKernel(bytes)
+      Row(docId, bytes.length, w, h, channels, luma)
+    }
   }
 
   /** Queries-map entry for the decode pipeline — ORACLE-CHECKED on the
@@ -305,38 +418,29 @@ object MmOps {
   private[graft] def wavHeader(sampleRate: Int, channels: Int, bitsPerSample: Int,
       nSamples: Int): Array[Byte] = {
     val dataLen = nSamples * channels * (bitsPerSample / 8)
-    val bb = java.nio.ByteBuffer.allocate(44).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    bb.put("RIFF".getBytes("US-ASCII")).putInt(36 + dataLen)
-    bb.put("WAVE".getBytes("US-ASCII"))
-    bb.put("fmt ".getBytes("US-ASCII")).putInt(16)
-    bb.putShort(1.toShort) // PCM
-    bb.putShort(channels.toShort).putInt(sampleRate)
-    bb.putInt(sampleRate * channels * (bitsPerSample / 8)) // byte rate
-    bb.putShort((channels * (bitsPerSample / 8)).toShort)  // block align
-    bb.putShort(bitsPerSample.toShort)
-    bb.put("data".getBytes("US-ASCII")).putInt(dataLen)
-    bb.array()
+    new Writer()
+      .ascii("RIFF").u32le(36 + dataLen).ascii("WAVE")
+      .ascii("fmt ").u32le(16)
+      .u16le(1) // PCM
+      .u16le(channels).u32le(sampleRate)
+      .u32le(sampleRate * channels * (bitsPerSample / 8)) // byte rate
+      .u16le(channels * (bitsPerSample / 8))              // block align
+      .u16le(bitsPerSample)
+      .ascii("data").u32le(dataLen)
+      .toArray
   }
 
   /** Parse a PCM WAV header: (sampleRate, channels, bits, nSamples),
     * or None when the magic bytes don't check out (quarantine lane). */
-  private[graft] def parseWavHeader(bytes: Array[Byte]): Option[(Int, Int, Int, Int)] = {
-    if (bytes.length < 44) return None
-    val bb = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    def ascii(n: Int): String = { val b = new Array[Byte](n); bb.get(b); new String(b, "US-ASCII") }
-    if (ascii(4) != "RIFF") return None
-    bb.getInt // riff size
-    if (ascii(4) != "WAVE" || ascii(4) != "fmt ") return None
-    bb.getInt // fmt size
-    val fmt = bb.getShort
-    val channels = bb.getShort.toInt
-    val rate = bb.getInt
-    bb.getInt; bb.getShort // byte rate, block align
-    val bits = bb.getShort.toInt
-    if (ascii(4) != "data" || fmt != 1) return None
-    val dataLen = bb.getInt
-    Some((rate, channels, bits, dataLen / (channels * (bits / 8))))
-  }
+  private[graft] def parseWavHeader(bytes: Array[Byte]): Option[(Int, Int, Int, Int)] =
+    walk(bytes) { r =>
+      need(r.fourcc(0) == "RIFF" && r.fourcc(8) == "WAVE" && r.fourcc(12) == "fmt ")
+      need(r.u16le(20) == 1 && r.fourcc(36) == "data") // PCM
+      val (channels, bits) = (r.u16le(22), r.u16le(34))
+      val frameBytes = channels * (bits / 8)
+      need(frameBytes > 0) // a zero-width frame holds no samples
+      Some((r.u32le(24).toInt, channels, bits, (r.u32le(40) / frameBytes).toInt))
+    }
 
   /** Audio-container metadata — the audio twin of [[meta]]/[[sniff]]:
     * each doc carries a REAL planted PCM WAV header (hash-derived
@@ -363,23 +467,13 @@ object MmOps {
         (lit(8000) + (h % 8) * 4000).cast(IntegerType).as("sample_rate"),
         (lit(1) + shiftright(h, 3) % 2).cast(IntegerType).as("channels"),
         (lit(1000) + shiftright(h, 4) % 9000).cast(IntegerType).as("n_samples"))
-    val outSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("sample_rate", IntegerType),
-      StructField("channels", IntegerType),
-      StructField("bits", IntegerType),
-      StructField("n_samples", IntegerType),
-      StructField("duration_ms", LongType)))
-    val enc = RowEncoder.encoderFor(outSchema)
-    params.mapPartitions { rows =>
-      rows.map { r =>
-        // REAL round trip: hash params → genuine RIFF bytes → parse
-        val header = wavHeader(r.getInt(1), r.getInt(2), 16, r.getInt(3))
-        val (rate, ch, bits, n) = parseWavHeader(header).getOrElse(
-          throw new IllegalStateException(s"unparseable planted WAV for doc ${r.getLong(0)}"))
-        Row(r.getLong(0), rate, ch, bits, n, n.toLong * 1000 / rate)
-      }
-    }(enc).orderBy(col("doc_id"))
+    plantedWalk(params, "doc_id BIGINT, sample_rate INT, channels INT, bits INT, " +
+        "n_samples INT, duration_ms BIGINT") { r =>
+      // REAL round trip: hash params → genuine RIFF bytes → parse
+      val header = wavHeader(r.getInt(1), r.getInt(2), 16, r.getInt(3))
+      val (rate, ch, bits, n) = planted("WAV", r.getLong(0))(parseWavHeader(header))
+      Row(r.getLong(0), rate, ch, bits, n, n.toLong * 1000 / rate)
+    }
   }
 
   /** dHash perceptual hash of a decoded raster: the image is reduced
@@ -483,23 +577,16 @@ object MmOps {
        |ORDER BY d.doc_id""".stripMargin) { (s, d) =>
     val blobs = Tables.documents(s, d)
       .select(col("doc_id"), graft.functions.Exprs.md5Long(col("text")).as("fallback"))
-    val outSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("is_image", BooleanType),
-      StructField("phash", LongType)))
-    val enc = RowEncoder.encoderFor(outSchema)
-    blobs.mapPartitions { rows =>
-      rows.map { r =>
-        val docId = r.getLong(0)
-        if (docId % 50 == 0) {
-          val img = javax.imageio.ImageIO.read(
-            new java.io.ByteArrayInputStream(syntheticPng(docId)))
-          Row(docId, true, dhash64(img))
-        } else {
-          Row(docId, false, r.getLong(1))
-        }
+    plantedWalk(blobs, "doc_id BIGINT, is_image BOOLEAN, phash BIGINT") { r =>
+      val docId = r.getLong(0)
+      if (docId % 50 == 0) {
+        val img = javax.imageio.ImageIO.read(
+          new java.io.ByteArrayInputStream(syntheticPng(docId)))
+        Row(docId, true, dhash64(img))
+      } else {
+        Row(docId, false, r.getLong(1))
       }
-    }(enc).orderBy(col("doc_id"))
+    }
   }
 
   /** Build a minimal genuine ISO-BMFF (MP4) container: ftyp + a
@@ -509,26 +596,22 @@ object MmOps {
     * RIFF). */
   private[graft] def mp4Bytes(brand: String, timescale: Int, duration: Int): Array[Byte] = {
     require(brand.length == 4)
-    val bb = java.nio.ByteBuffer.allocate(24 + 16 + 116)
-      .order(java.nio.ByteOrder.BIG_ENDIAN)
-    def fourcc(s: String): Unit = bb.put(s.getBytes("US-ASCII"))
-    bb.putInt(24); fourcc("ftyp"); fourcc(brand); bb.putInt(0)
-    fourcc("isom"); fourcc("mp41")
-    bb.putInt(16); fourcc("free"); bb.putLong(0L)
-    bb.putInt(116); fourcc("moov")
-    bb.putInt(108); fourcc("mvhd")
-    bb.putInt(0)                     // version 0 + flags
-    bb.putInt(0).putInt(0)           // creation / modification time
-    bb.putInt(timescale).putInt(duration)
-    bb.putInt(0x00010000).putShort(0x0100.toShort) // rate 1.0, volume 1.0
-    bb.put(new Array[Byte](10))      // reserved
-    // unity matrix
-    bb.putInt(0x00010000).putInt(0).putInt(0)
-    bb.putInt(0).putInt(0x00010000).putInt(0)
-    bb.putInt(0).putInt(0).putInt(0x40000000)
-    bb.put(new Array[Byte](24))      // pre_defined
-    bb.putInt(1)                     // next_track_ID
-    bb.array()
+    new Writer()
+      .u32be(24).ascii("ftyp").ascii(brand).u32be(0).ascii("isom").ascii("mp41")
+      .u32be(16).ascii("free").zeros(8)
+      .u32be(116).ascii("moov")
+      .u32be(108).ascii("mvhd")
+      .u32be(0)                          // version 0 + flags
+      .u32be(0).u32be(0)                 // creation / modification time
+      .u32be(timescale).u32be(duration)
+      .u32be(0x00010000).u16be(0x0100)   // rate 1.0, volume 1.0
+      .zeros(10)                         // reserved
+      .u32be(0x00010000).u32be(0).u32be(0) // unity matrix
+      .u32be(0).u32be(0x00010000).u32be(0)
+      .u32be(0).u32be(0).u32be(0x40000000)
+      .zeros(24)                         // pre_defined
+      .u32be(1)                          // next_track_ID
+      .toArray
   }
 
   /** Walk an ISO-BMFF box tree: top-level boxes by (size32, fourcc),
@@ -536,35 +619,34 @@ object MmOps {
     * mvhd's (timescale, duration). Returns None on any malformed box
     * (size < 8, overruns the buffer) — the quarantine lane. A real
     * demuxer's first loop. */
-  private[graft] def parseMp4Meta(bytes: Array[Byte]): Option[(String, Int, Long)] = {
-    val bb = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.BIG_ENDIAN)
-    def cc(off: Int): String = new String(bytes, off, 4, "US-ASCII")
-    var brand: String = null
-    var ts = -1
-    var dur = -1L
-    var pos = 0
-    while (pos + 8 <= bytes.length) {
-      val size = bb.getInt(pos)
-      if (size < 8 || pos + size > bytes.length) return None
-      cc(pos + 4) match {
-        case "ftyp" if size >= 12 => brand = cc(pos + 8)
-        case "moov" =>
-          var cpos = pos + 8
-          while (cpos + 8 <= pos + size) {
-            val csize = bb.getInt(cpos)
-            if (csize < 8 || cpos + csize > pos + size) return None
-            if (cc(cpos + 4) == "mvhd" && csize >= 32 && bytes(cpos + 8) == 0) {
-              ts = bb.getInt(cpos + 20)       // after version/flags + 2 times
-              dur = bb.getInt(cpos + 24).toLong
+  private[graft] def parseMp4Meta(bytes: Array[Byte]): Option[(String, Int, Long)] =
+    walk(bytes) { r =>
+      var brand: String = null
+      var ts = -1
+      var dur = -1L
+      var pos = 0L
+      while (pos + 8 <= r.length) {
+        val size = r.u32be(pos)
+        need(size >= 8 && pos + size <= r.length)
+        r.fourcc(pos + 4) match {
+          case "ftyp" if size >= 12 => brand = r.fourcc(pos + 8)
+          case "moov" =>
+            var cpos = pos + 8
+            while (cpos + 8 <= pos + size) {
+              val csize = r.u32be(cpos)
+              need(csize >= 8 && cpos + csize <= pos + size)
+              if (r.fourcc(cpos + 4) == "mvhd" && csize >= 32 && r.u8(cpos + 8) == 0) {
+                ts = r.u32be(cpos + 20).toInt // after version/flags + 2 times
+                dur = r.u32be(cpos + 24)
+              }
+              cpos += csize
             }
-            cpos += csize
-          }
-        case _ => ()
+          case _ => ()
+        }
+        pos += size
       }
-      pos += size
+      if (brand != null && ts > 0) Some((brand, ts, dur)) else None
     }
-    if (brand != null && ts > 0 && dur >= 0) Some((brand, ts, dur)) else None
-  }
 
   /** Video-container metadata — the ISO-BMFF twin of [[wavMeta]]:
     * hash-derived parameters are laid out as a GENUINE MP4 box tree
@@ -588,37 +670,26 @@ object MmOps {
        |FROM m ORDER BY doc_id""".stripMargin) { (s, d) =>
     val src = Tables.documents(s, d)
       .select(col("doc_id"), Exprs.md5Long(col("text")).as("h"))
-    val outSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("brand", StringType),
-      StructField("timescale", IntegerType), StructField("duration_units", LongType),
-      StructField("duration_ms", LongType)))
-    val enc = RowEncoder.encoderFor(outSchema)
-    src.mapPartitions { rows =>
-      rows.map { r =>
-        val h = r.getLong(1)
-        val brand = if (((h >> 2) % 2) == 0) "isom" else "mp42"
-        val ts = (h % 4) match {
-          case 0 => 600; case 1 => 1000; case 2 => 24000; case _ => 90000
-        }
-        val dur = (1000 + (h >> 4) % 100000).toInt
-        val (pBrand, pTs, pDur) = parseMp4Meta(mp4Bytes(brand, ts, dur)).getOrElse(
-          throw new IllegalStateException(s"unwalkable planted MP4 for doc ${r.getLong(0)}"))
-        Row(r.getLong(0), pBrand, pTs, pDur, pDur * 1000L / pTs)
+    plantedWalk(src, "doc_id BIGINT, brand STRING, timescale INT, duration_units BIGINT, " +
+        "duration_ms BIGINT") { r =>
+      val h = r.getLong(1)
+      val brand = if (((h >> 2) % 2) == 0) "isom" else "mp42"
+      val ts = (h % 4) match {
+        case 0 => 600; case 1 => 1000; case 2 => 24000; case _ => 90000
       }
-    }(enc).orderBy(col("doc_id"))
+      val dur = (1000 + (h >> 4) % 100000).toInt
+      val (pBrand, pTs, pDur) = planted("MP4", r.getLong(0))(parseMp4Meta(mp4Bytes(brand, ts, dur)))
+      Row(r.getLong(0), pBrand, pTs, pDur, pDur * 1000L / pTs)
+    }
   }
 
   /** Build a complete PCM WAV blob: [[wavHeader]] followed by the
     * 16-bit little-endian samples — the genuine byte layout an audio
     * decoder reads. */
   private[graft] def wavBytes(sampleRate: Int, samples: Array[Short]): Array[Byte] = {
-    val header = wavHeader(sampleRate, 1, 16, samples.length)
-    val bb = java.nio.ByteBuffer.allocate(header.length + samples.length * 2)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    bb.put(header)
-    var i = 0
-    while (i < samples.length) { bb.putShort(samples(i)); i += 1 }
-    bb.array()
+    val out = new Writer().bytes(wavHeader(sampleRate, 1, 16, samples.length))
+    samples.foreach(out.u16le(_))
+    out.toArray
   }
 
   /** Deterministic planted waveform for a doc: a square wave (period
@@ -652,9 +723,7 @@ object MmOps {
     * unnest(range(n)) — sign flips at multiples of period/2, the
     * silent tail contributes zero samples, frames group by i//64. */
   private[graft] def audioFeatures(bytes: Array[Byte]): Option[(Int, Int, Long, Int, Int, Int)] =
-    parseWavHeader(bytes).map { case (_, channels, bits, nSamples) =>
-      val bb = java.nio.ByteBuffer.wrap(bytes, 44, bytes.length - 44)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    walk(bytes) { r => parseWavHeader(bytes).map { case (_, channels, _, nSamples) =>
       var peak = 0
       var sumSq = 0L
       var zc = 0
@@ -665,7 +734,7 @@ object MmOps {
       val n = nSamples * channels // total 16-bit samples (bits == 16 here)
       var i = 0
       while (i < n) {
-        val s = bb.getShort.toInt
+        val s = r.u16le(44 + 2L * i).toShort.toInt
         val a = math.abs(s)
         if (a > peak) peak = a
         if (a > frameMax) frameMax = a
@@ -680,7 +749,7 @@ object MmOps {
         }
       }
       (n, peak, sumSq, zc, frames, silentFrames)
-    }
+    }}
 
   /** Audio energy / silence profiling — the audio lane's decode→
     * feature-extract twin of [[imageNearDup]]'s image lane: every doc
@@ -731,21 +800,13 @@ object MmOps {
       |FROM ag a JOIN fr USING (doc_id) ORDER BY doc_id""".stripMargin) { (s, d) =>
     val src = Tables.documents(s, d)
       .select(col("doc_id"), Exprs.md5Long(col("text")).as("h"))
-    val outSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("n_samples", IntegerType),
-      StructField("peak", IntegerType), StructField("sum_sq", LongType),
-      StructField("zero_crossings", IntegerType), StructField("n_frames", IntegerType),
-      StructField("n_silent_frames", IntegerType)))
-    val enc = RowEncoder.encoderFor(outSchema)
-    src.mapPartitions { rows =>
-      rows.map { r =>
-        val (rate, samples) = syntheticWave(r.getLong(1))
-        val (n, peak, sumSq, zc, frames, silent) =
-          audioFeatures(wavBytes(rate, samples)).getOrElse(
-            throw new IllegalStateException(s"unparseable planted WAV for doc ${r.getLong(0)}"))
-        Row(r.getLong(0), n, peak, sumSq, zc, frames, silent)
-      }
-    }(enc).orderBy(col("doc_id"))
+    plantedWalk(src, "doc_id BIGINT, n_samples INT, peak INT, sum_sq BIGINT, " +
+        "zero_crossings INT, n_frames INT, n_silent_frames INT") { r =>
+      val (rate, samples) = syntheticWave(r.getLong(1))
+      val (n, peak, sumSq, zc, frames, silent) =
+        planted("WAV", r.getLong(0))(audioFeatures(wavBytes(rate, samples)))
+      Row(r.getLong(0), n, peak, sumSq, zc, frames, silent)
+    }
   }
 
   /** Candidate-pair finder over (doc_id, phash) frames: the 64-bit
@@ -819,17 +880,12 @@ object MmOps {
        |ORDER BY i.doc_id""".stripMargin) { (s, d) =>
     val imgIds = Tables.documents(s, d)
       .filter(col("doc_id") % 50 === 0).select(col("doc_id"))
-    val outSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("phash", LongType)))
-    val enc = RowEncoder.encoderFor(outSchema)
-    val hashes = imgIds.mapPartitions { rows =>
-      rows.map { r =>
-        val docId = r.getLong(0)
-        val img = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(syntheticPng(docId)))
-        Row(docId, dhash64(img))
-      }
-    }(enc)
+    val hashes = rowsOf(imgIds, "doc_id BIGINT, phash BIGINT") { r =>
+      val docId = r.getLong(0)
+      val img = javax.imageio.ImageIO.read(
+        new java.io.ByteArrayInputStream(syntheticPng(docId)))
+      Row(docId, dhash64(img))
+    }
     val pairs = nearDupPairs(hashes, maxHamming = 6).persist()
     val perImage = pairs.select(col("da").as("doc_id"), col("hamming"))
       .unionAll(pairs.select(col("db").as("doc_id"), col("hamming")))
@@ -868,27 +924,26 @@ object MmOps {
     * until a start-of-frame (SOF0 baseline / SOF2 progressive) yields
     * precision, height, width, component count. Returns
     * (sofMarker, width, height, nComponents, nSegmentsBeforeSof). */
-  private[graft] def parseJpegMeta(bytes: Array[Byte]): Option[(String, Int, Int, Int, Int)] = {
-    if (bytes.length < 4 || (bytes(0) & 0xff) != 0xff || (bytes(1) & 0xff) != 0xd8) return None
-    var i = 2
-    var segs = 0
-    while (i + 3 < bytes.length) {
-      if ((bytes(i) & 0xff) != 0xff) return None
-      val marker = bytes(i + 1) & 0xff
-      if (marker == 0xc0 || marker == 0xc2) {
-        // SOF frame: len(2) precision(1) height(2) width(2) ncomp(1)
-        val h = ((bytes(i + 5) & 0xff) << 8) | (bytes(i + 6) & 0xff)
-        val w = ((bytes(i + 7) & 0xff) << 8) | (bytes(i + 8) & 0xff)
-        val nc = bytes(i + 9) & 0xff
-        val sof = if (marker == 0xc0) "SOF0" else "SOF2"
-        return Some((sof, w, h, nc, segs))
+  private[graft] def parseJpegMeta(bytes: Array[Byte]): Option[(String, Int, Int, Int, Int)] =
+    walk(bytes) { r =>
+      need(r.u8(0) == 0xff && r.u8(1) == 0xd8)
+      var i = 2L
+      var segs = 0
+      var sof = Option.empty[(String, Int, Int, Int, Int)]
+      while (sof.isEmpty && i + 3 < r.length) {
+        need(r.u8(i) == 0xff)
+        val marker = r.u8(i + 1)
+        if (marker == 0xc0 || marker == 0xc2) {
+          // SOF frame: len(2) precision(1) height(2) width(2) ncomp(1)
+          sof = Some((if (marker == 0xc0) "SOF0" else "SOF2",
+            r.u16be(i + 7), r.u16be(i + 5), r.u8(i + 9), segs))
+        } else {
+          i += 2 + r.u16be(i + 2)
+          segs += 1
+        }
       }
-      val len = ((bytes(i + 2) & 0xff) << 8) | (bytes(i + 3) & 0xff)
-      i += 2 + len
-      segs += 1
+      sof
     }
-    None
-  }
 
   /** JPEG structural metadata via a genuine marker-segment walk — the
     * third leg of the container story (PNG full decode, RIFF/WAV
@@ -910,52 +965,47 @@ object MmOps {
        |FROM m ORDER BY doc_id""".stripMargin) { (s, d) =>
     val src = Tables.documents(s, d)
       .select(col("doc_id"), Exprs.md5Long(col("text")).as("h"))
-    val outSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("sof_marker", StringType),
-      StructField("width", IntegerType), StructField("height", IntegerType),
-      StructField("n_components", IntegerType)))
-    val enc = RowEncoder.encoderFor(outSchema)
-    src.mapPartitions { rows =>
-      rows.map { r =>
-        val h = r.getLong(1)
-        val (w0, h0) = ((8 + h % 48).toInt, (8 + (h >> 6) % 48).toInt)
-        val (sof, w, ht, nc, _) = parseJpegMeta(syntheticJpeg(w0, h0)).getOrElse(
-          throw new IllegalStateException(s"unwalkable planted JPEG for doc ${r.getLong(0)}"))
-        Row(r.getLong(0), sof, w, ht, nc)
-      }
-    }(enc).orderBy(col("doc_id"))
+    plantedWalk(src,
+        "doc_id BIGINT, sof_marker STRING, width INT, height INT, n_components INT") { r =>
+      val h = r.getLong(1)
+      val (w0, h0) = ((8 + h % 48).toInt, (8 + (h >> 6) % 48).toInt)
+      val (sof, w, ht, nc, _) =
+        planted("JPEG", r.getLong(0))(parseJpegMeta(syntheticJpeg(w0, h0)))
+      Row(r.getLong(0), sof, w, ht, nc)
+    }
   }
 
   /** Walk a PNG's chunk stream (no pixel decode): 8-byte signature,
     * then [len(4 BE), type(4 ASCII), data, crc(4)] frames; IHDR yields
-    * width/height/bit-depth/color-type. Returns (width, height,
-    * bitDepth, colorType, firstChunk, lastChunk, nIdat). */
-  private[graft] def parsePngChunks(bytes: Array[Byte]): Option[(Int, Int, Int, Int, String, String, Int)] = {
-    val sig = Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a)
-    if (bytes.length < 8 || !sig.indices.forall(i => (bytes(i) & 0xff) == sig(i))) return None
-    def be32(i: Int): Int =
-      ((bytes(i) & 0xff) << 24) | ((bytes(i + 1) & 0xff) << 16) |
-        ((bytes(i + 2) & 0xff) << 8) | (bytes(i + 3) & 0xff)
-    var i = 8
-    var first: String = null
-    var last: String = null
-    var nIdat = 0
-    var w, h, depth, color = -1
-    while (i + 8 <= bytes.length) {
-      val len = be32(i)
-      val typ = new String(bytes, i + 4, 4, "US-ASCII")
-      if (first == null) first = typ
-      last = typ
-      if (typ == "IHDR") {
-        w = be32(i + 8); h = be32(i + 12)
-        depth = bytes(i + 16) & 0xff; color = bytes(i + 17) & 0xff
+    * width/height/bit-depth/color-type; a chunk that overruns the blob
+    * is malformed. Returns (width, height, bitDepth, colorType,
+    * firstChunk, lastChunk, nIdat). */
+  private[graft] def parsePngChunks(bytes: Array[Byte]): Option[(Int, Int, Int, Int, String, String, Int)] =
+    walk(bytes) { r =>
+      need(PngSignature.indices.forall(i => r.u8(i) == PngSignature(i)))
+      var i = 8L
+      var first: String = null
+      var last: String = null
+      var nIdat = 0
+      var w, h, depth, color = -1
+      while (i + 8 <= r.length) {
+        val len = r.u32be(i)
+        r.at(i, 12 + len) // len + type + data + crc must fit
+        val typ = r.fourcc(i + 4)
+        if (first == null) first = typ
+        last = typ
+        if (typ == "IHDR") {
+          w = r.u32be(i + 8).toInt; h = r.u32be(i + 12).toInt
+          depth = r.u8(i + 16); color = r.u8(i + 17)
+        }
+        if (typ == "IDAT") nIdat += 1
+        i += 12 + len
       }
-      if (typ == "IDAT") nIdat += 1
-      i += 12 + len // len + type + data + crc
+      if (w < 0 || last != "IEND") None
+      else Some((w, h, depth, color, first, last, nIdat))
     }
-    if (w < 0 || last != "IEND") None
-    else Some((w, h, depth, color, first, last, nIdat))
-  }
+
+  private val PngSignature = Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a)
 
   /** PNG structural metadata via a genuine chunk walk — the fourth leg
     * of the container story (JPEG marker walk, RIFF/WAV, ISO-BMFF):
@@ -976,21 +1026,13 @@ object MmOps {
       |  CAST(1 AS INT) AS has_idat
       |FROM documents ORDER BY doc_id""".stripMargin) { (s, d) =>
     val src = Tables.documents(s, d).select(col("doc_id"))
-    val outSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("width", IntegerType),
-      StructField("height", IntegerType), StructField("bit_depth", IntegerType),
-      StructField("color_type", IntegerType), StructField("first_chunk", StringType),
-      StructField("last_chunk", StringType), StructField("has_idat", IntegerType)))
-    val enc = RowEncoder.encoderFor(outSchema)
-    src.mapPartitions { rows =>
-      rows.map { r =>
-        val docId = r.getLong(0)
-        val (w, h, depth, color, first, last, nIdat) =
-          parsePngChunks(syntheticPng(docId)).getOrElse(
-            throw new IllegalStateException(s"unwalkable planted PNG for doc $docId"))
-        Row(docId, w, h, depth, color, first, last, if (nIdat > 0) 1 else 0)
-      }
-    }(enc).orderBy(col("doc_id"))
+    plantedWalk(src, "doc_id BIGINT, width INT, height INT, bit_depth INT, color_type INT, " +
+        "first_chunk STRING, last_chunk STRING, has_idat INT") { r =>
+      val docId = r.getLong(0)
+      val (w, h, depth, color, first, last, nIdat) =
+        planted("PNG", docId)(parsePngChunks(syntheticPng(docId)))
+      Row(docId, w, h, depth, color, first, last, if (nIdat > 0) 1 else 0)
+    }
   }
 
   /** Deterministic GIF for `docId` via the REAL JDK GIF encoder
@@ -1021,19 +1063,16 @@ object MmOps {
     * compression, fileSize, dataOffset); None on bad magic, a non-40
     * DIB header, or a declared size disagreeing with the buffer. */
   private[graft] def parseBmpMeta(
-      bytes: Array[Byte]): Option[(Int, Int, Int, Int, Int, Int)] = {
-    if (bytes.length < 54 || bytes(0) != 'B' || bytes(1) != 'M') return None
-    def le32(i: Int): Int = (bytes(i) & 0xff) | ((bytes(i + 1) & 0xff) << 8) |
-      ((bytes(i + 2) & 0xff) << 16) | ((bytes(i + 3) & 0xff) << 24)
-    def le16(i: Int): Int = (bytes(i) & 0xff) | ((bytes(i + 1) & 0xff) << 8)
-    val fileSize = le32(2)
-    val dataOffset = le32(10)
-    if (fileSize != bytes.length || dataOffset > bytes.length) return None
-    if (le32(14) != 40) return None // only BITMAPINFOHEADER walked
-    val (w, h) = (le32(18), le32(22))
-    if (le16(26) != 1) return None // planes
-    Some((w, h, le16(28), le32(30), fileSize, dataOffset))
-  }
+      bytes: Array[Byte]): Option[(Int, Int, Int, Int, Int, Int)] =
+    walk(bytes) { r =>
+      need(r.length >= 54 && r.ascii(0, 2) == "BM")
+      val (fileSize, dataOffset) = (r.u32le(2), r.u32le(10))
+      need(fileSize == r.length && dataOffset <= r.length)
+      need(r.u32le(14) == 40) // only BITMAPINFOHEADER walked
+      need(r.u16le(26) == 1)  // planes
+      Some((r.u32le(18).toInt, r.u32le(22).toInt, r.u16le(28), r.u32le(30).toInt,
+        fileSize.toInt, dataOffset.toInt))
+    }
 
   private[graft] def syntheticGif(docId: Long): Array[Byte] = {
     val w = 8 + (docId % 16).toInt
@@ -1060,36 +1099,33 @@ object MmOps {
     * image-descriptor / trailer blocks with sub-block chains skipped
     * size-first (never decoded). Returns (version, width, height,
     * nFrames, sawTrailer). */
-  private[graft] def parseGifMeta(bytes: Array[Byte]): Option[(String, Int, Int, Int, Boolean)] = {
-    if (bytes.length < 13 || bytes(0) != 'G' || bytes(1) != 'I' || bytes(2) != 'F') return None
-    val version = new String(bytes, 3, 3, "US-ASCII")
-    def le16(i: Int): Int = (bytes(i) & 0xff) | ((bytes(i + 1) & 0xff) << 8)
-    val w = le16(6)
-    val h = le16(8)
-    val packed = bytes(10) & 0xff
-    var i = 13 + (if ((packed & 0x80) != 0) 3 * (1 << ((packed & 7) + 1)) else 0)
-    var frames = 0
-    var trailer = false
-    def skipSubBlocks(): Unit = {
-      while (i < bytes.length && (bytes(i) & 0xff) != 0) i += 1 + (bytes(i) & 0xff)
-      i += 1 // terminator
-    }
-    while (!trailer && i < bytes.length) {
-      (bytes(i) & 0xff) match {
-        case 0x21 => // extension: label byte then sub-blocks
-          i += 2; skipSubBlocks()
-        case 0x2c => // image descriptor
-          frames += 1
-          val lp = bytes(i + 9) & 0xff
-          i += 10 + (if ((lp & 0x80) != 0) 3 * (1 << ((lp & 7) + 1)) else 0)
-          i += 1 // LZW minimum code size
-          skipSubBlocks()
-        case 0x3b => trailer = true
-        case _ => return None // unknown block: malformed
+  private[graft] def parseGifMeta(bytes: Array[Byte]): Option[(String, Int, Int, Int, Boolean)] =
+    walk(bytes) { r =>
+      need(r.length >= 13 && r.ascii(0, 3) == "GIF")
+      // a color table follows when the packed byte's top bit is set
+      def colorTable(packed: Int): Int =
+        if ((packed & 0x80) != 0) 3 * (1 << ((packed & 7) + 1)) else 0
+      var i = 13L + colorTable(r.u8(10))
+      var frames = 0
+      var trailer = false
+      def skipSubBlocks(): Unit = {
+        while (i < r.length && r.u8(i) != 0) i += 1 + r.u8(i)
+        i += 1 // terminator
       }
+      while (!trailer && i < r.length) {
+        r.u8(i) match {
+          case 0x21 => // extension: label byte then sub-blocks
+            i += 2; skipSubBlocks()
+          case 0x2c => // image descriptor, then the LZW minimum code size
+            frames += 1
+            i += 10 + colorTable(r.u8(i + 9)) + 1
+            skipSubBlocks()
+          case 0x3b => trailer = true
+          case _ => malformed // unknown block
+        }
+      }
+      Some((r.ascii(3, 3), r.u16le(6), r.u16le(8), frames, trailer))
     }
-    Some((version, w, h, frames, trailer))
-  }
 
   /** GIF structural metadata — fifth container leg: the block walk
     * skips LZW sub-block chains size-first exactly like a demuxer,
@@ -1113,19 +1149,12 @@ object MmOps {
       |       * (8 + (doc_id // 16) % 16) AS INT) AS pixel_bytes
       |FROM documents ORDER BY doc_id""".stripMargin) { (s, d) =>
     val src = Tables.documents(s, d).select(col("doc_id"))
-    val outSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("width", IntegerType),
-      StructField("height", IntegerType), StructField("bpp", IntegerType),
-      StructField("compression", IntegerType), StructField("pixel_bytes", IntegerType)))
-    val enc = RowEncoder.encoderFor(outSchema)
-    src.mapPartitions { rows =>
-      rows.map { r =>
-        val docId = r.getLong(0)
-        val (w, h, bpp, comp, fileSize, off) = parseBmpMeta(syntheticBmp(docId)).getOrElse(
-          throw new IllegalStateException(s"unwalkable planted BMP for doc $docId"))
-        Row(docId, w, h, bpp, comp, fileSize - off)
-      }
-    }(enc).orderBy(col("doc_id"))
+    plantedWalk(src,
+        "doc_id BIGINT, width INT, height INT, bpp INT, compression INT, pixel_bytes INT") { r =>
+      val docId = r.getLong(0)
+      val (w, h, bpp, comp, fileSize, off) = planted("BMP", docId)(parseBmpMeta(syntheticBmp(docId)))
+      Row(docId, w, h, bpp, comp, fileSize - off)
+    }
   }
 
   val gifMeta: GraftOp = GraftOp(
@@ -1136,19 +1165,12 @@ object MmOps {
       |  CAST(1 AS INT) AS n_frames, CAST(1 AS INT) AS has_trailer
       |FROM documents ORDER BY doc_id""".stripMargin) { (s, d) =>
     val src = Tables.documents(s, d).select(col("doc_id"))
-    val outSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("version", StringType),
-      StructField("width", IntegerType), StructField("height", IntegerType),
-      StructField("n_frames", IntegerType), StructField("has_trailer", IntegerType)))
-    val enc = RowEncoder.encoderFor(outSchema)
-    src.mapPartitions { rows =>
-      rows.map { r =>
-        val docId = r.getLong(0)
-        val (v, w, h, nf, tr) = parseGifMeta(syntheticGif(docId)).getOrElse(
-          throw new IllegalStateException(s"unwalkable planted GIF for doc $docId"))
-        Row(docId, v, w, h, nf, if (tr) 1 else 0)
-      }
-    }(enc).orderBy(col("doc_id"))
+    plantedWalk(src,
+        "doc_id BIGINT, version STRING, width INT, height INT, n_frames INT, has_trailer INT") { r =>
+      val docId = r.getLong(0)
+      val (v, w, h, nf, tr) = planted("GIF", docId)(parseGifMeta(syntheticGif(docId)))
+      Row(docId, v, w, h, nf, if (tr) 1 else 0)
+    }
   }
 
   /** Build a POSIX ustar archive: one 512-byte header per entry (octal
@@ -1156,27 +1178,21 @@ object MmOps {
     * checksum field blanked to spaces, `ustar` magic), payload padded
     * to the 512 boundary, two zero blocks at the end. */
   private[graft] def tarBytes(entries: Seq[(String, Array[Byte])]): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
+    val out = new Writer()
     entries.foreach { case (name, data) =>
-      val h = new Array[Byte](512)
-      def putStr(off: Int, v: String): Unit = {
-        val b = v.getBytes("US-ASCII"); System.arraycopy(b, 0, h, off, b.length)
-      }
-      putStr(0, name)
-      putStr(100, "0000644"); putStr(108, "0000000"); putStr(116, "0000000")
-      putStr(124, f"${data.length}%011o")
-      putStr(136, "00000000000")
-      java.util.Arrays.fill(h, 148, 156, ' '.toByte)
-      h(156) = '0'
-      putStr(257, "ustar"); putStr(263, "00")
-      var sum = 0L; var j = 0
-      while (j < 512) { sum += (h(j) & 0xff); j += 1 }
-      putStr(148, f"$sum%06o"); h(154) = 0; h(155) = ' '
-      bos.write(h); bos.write(data)
-      bos.write(new Array[Byte]((512 - data.length % 512) % 512))
+      // name, mode, uid, gid, size, mtime, checksum, type '0', linkname,
+      // magic, version, zero fill to 512
+      def header(checksum: String): Array[Byte] = new Writer()
+        .field(name, 100).field("0000644", 8).field("0000000", 8).field("0000000", 8)
+        .field(f"${data.length}%011o", 12).field("00000000000", 12)
+        .ascii(checksum).ascii("0").zeros(100)
+        .field("ustar", 6).ascii("00").zeros(247)
+        .toArray
+      val sum = header(" " * 8).map(_ & 0xff).sum // summed with the field blanked
+      out.bytes(header(f"$sum%06o" + "\u0000 ")).bytes(data)
+        .zeros((512 - data.length % 512) % 512)
     }
-    bos.write(new Array[Byte](1024))
-    bos.toByteArray
+    out.zeros(1024).toArray
   }
 
   /** Walk a ustar archive header-first (the WebDataset reader loop):
@@ -1185,27 +1201,31 @@ object MmOps {
     * — stop at the first zero block. Returns (nEntries, payloadBytes,
     * headersOk, firstName); None when the terminator is missing or a
     * header is unwalkable. */
-  private[graft] def parseTar(bytes: Array[Byte]): Option[(Int, Long, Int, String)] = {
-    var i = 0; var entries = 0; var payload = 0L; var okChk = 0; var first = ""
-    while (i + 512 <= bytes.length) {
-      if (bytes(i) == 0) return Some((entries, payload, okChk, first))
-      if (new String(bytes, i + 257, 5, "US-ASCII") != "ustar") return None
-      var e = i
-      while (e < i + 100 && bytes(e) != 0) e += 1
-      val name = new String(bytes, i, e - i, "US-ASCII")
-      val stored = java.lang.Long.parseLong(
-        new String(bytes, i + 148, 6, "US-ASCII").trim, 8)
-      var sum = 0L; var j = 0
-      while (j < 512) { sum += (if (j >= 148 && j < 156) 32 else bytes(i + j) & 0xff); j += 1 }
-      if (sum == stored) okChk += 1
-      val size = java.lang.Long.parseLong(
-        new String(bytes, i + 124, 11, "US-ASCII").trim, 8)
-      if (entries == 0) first = name
-      entries += 1; payload += size
-      i += 512 + ((size + 511) / 512 * 512).toInt
+  private[graft] def parseTar(bytes: Array[Byte]): Option[(Int, Long, Int, String)] =
+    walk(bytes) { r =>
+      // an octal field: digits only, so no sign, and 11 digits cannot overflow
+      def octal(off: Long, n: Int): Long = {
+        val digits = r.ascii(off, n).trim
+        need(digits.nonEmpty && digits.forall(c => c >= '0' && c <= '7'))
+        java.lang.Long.parseLong(digits, 8)
+      }
+      var i = 0L; var entries = 0; var payload = 0L; var okChk = 0; var first = ""
+      // every 512-byte block must fit; one starting with NUL ends the archive
+      while (r.u8(r.at(i, 512)) != 0) {
+        need(r.ascii(i + 257, 5) == "ustar")
+        var e = i
+        while (e < i + 100 && r.u8(e) != 0) e += 1
+        val name = r.ascii(i, (e - i).toInt)
+        var sum = 0L; var j = 0
+        while (j < 512) { sum += (if (j >= 148 && j < 156) 32 else r.u8(i + j)); j += 1 }
+        if (sum == octal(i + 148, 6)) okChk += 1
+        val size = octal(i + 124, 11)
+        if (entries == 0) first = name
+        entries += 1; payload += size
+        i += 512 + (size + 511) / 512 * 512
+      }
+      Some((entries, payload, okChk, first))
     }
-    None
-  }
 
   /** TAR / WebDataset sample metadata — sixth container leg, and the
     * container LLM training shards actually ship in: each document
@@ -1228,61 +1248,46 @@ object MmOps {
       |  concat(CAST(doc_id AS VARCHAR), '.txt') AS first_name
       |FROM documents ORDER BY doc_id""".stripMargin) { (s, d) =>
     val src = Tables.documents(s, d).select(col("doc_id"), col("text"), col("lang"))
-    val outSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("n_entries", IntegerType),
-      StructField("payload_bytes", LongType), StructField("n_blocks", LongType),
-      StructField("headers_ok", IntegerType), StructField("first_name", StringType)))
-    val enc = RowEncoder.encoderFor(outSchema)
-    src.mapPartitions { rows =>
-      rows.map { r =>
-        val docId = r.getLong(0)
-        val tar = tarBytes(Seq(
-          s"$docId.txt" -> r.getString(1).getBytes("UTF-8"),
-          s"$docId.cls" -> r.getString(2).getBytes("UTF-8")))
-        val (n, payload, ok, first) = parseTar(tar).getOrElse(
-          throw new IllegalStateException(s"unwalkable planted tar for doc $docId"))
-        Row(docId, n, payload, tar.length.toLong / 512, ok, first)
-      }
-    }(enc).orderBy(col("doc_id"))
+    plantedWalk(src, "doc_id BIGINT, n_entries INT, payload_bytes BIGINT, n_blocks BIGINT, " +
+        "headers_ok INT, first_name STRING") { r =>
+      val docId = r.getLong(0)
+      val tar = tarBytes(Seq(
+        s"$docId.txt" -> r.getString(1).getBytes("UTF-8"),
+        s"$docId.cls" -> r.getString(2).getBytes("UTF-8")))
+      val (n, payload, ok, first) = planted("tar", docId)(parseTar(tar))
+      Row(docId, n, payload, tar.length.toLong / 512, ok, first)
+    }
   }
 
   /** Build a store-method (no compression) ZIP: local file headers +
     * payloads, then the central directory, then the end-of-central-
     * directory record — real CRC-32s via java.util.zip. */
   private[graft] def zipBytes(entries: Seq[(String, Array[Byte])]): Array[Byte] = {
-    import java.nio.{ByteBuffer, ByteOrder}
-    val bos = new java.io.ByteArrayOutputStream()
+    val out = new Writer()
     val cds = entries.map { case (name, data) =>
-      val off = bos.size()
+      val off = out.size
       val crcCalc = new java.util.zip.CRC32(); crcCalc.update(data)
       val crc = crcCalc.getValue
-      val nb = name.getBytes("US-ASCII")
-      val bb = ByteBuffer.allocate(30).order(ByteOrder.LITTLE_ENDIAN)
-      bb.putInt(0x04034b50); bb.putShort(20); bb.putShort(0); bb.putShort(0)
-      bb.putShort(0); bb.putShort(0)
-      bb.putInt(crc.toInt); bb.putInt(data.length); bb.putInt(data.length)
-      bb.putShort(nb.length.toShort); bb.putShort(0)
-      bos.write(bb.array()); bos.write(nb); bos.write(data)
+      // local header: version, flags, method (store), time, date, crc,
+      // sizes, name length, extra length
+      out.u32le(0x04034b50).u16le(20).u16le(0).u16le(0).u16le(0).u16le(0)
+        .u32le(crc).u32le(data.length).u32le(data.length).u16le(name.length).u16le(0)
+        .ascii(name).bytes(data)
       (name, crc, data.length, off)
     }
-    val cdStart = bos.size()
+    val cdStart = out.size
     cds.foreach { case (name, crc, size, off) =>
-      val nb = name.getBytes("US-ASCII")
-      val bb = ByteBuffer.allocate(46).order(ByteOrder.LITTLE_ENDIAN)
-      bb.putInt(0x02014b50); bb.putShort(20); bb.putShort(20); bb.putShort(0)
-      bb.putShort(0); bb.putShort(0); bb.putShort(0)
-      bb.putInt(crc.toInt); bb.putInt(size); bb.putInt(size)
-      bb.putShort(nb.length.toShort); bb.putShort(0); bb.putShort(0)
-      bb.putShort(0); bb.putShort(0); bb.putInt(0); bb.putInt(off)
-      bos.write(bb.array()); bos.write(nb)
+      // central entry: versions, flags, method, time, date, crc, sizes,
+      // name/extra/comment lengths, disk, attributes, local offset
+      out.u32le(0x02014b50).u16le(20).u16le(20).u16le(0).u16le(0).u16le(0).u16le(0)
+        .u32le(crc).u32le(size).u32le(size).u16le(name.length).u16le(0).u16le(0)
+        .u16le(0).u16le(0).u32le(0).u32le(off)
+        .ascii(name)
     }
-    val cdSize = bos.size() - cdStart
-    val bb = ByteBuffer.allocate(22).order(ByteOrder.LITTLE_ENDIAN)
-    bb.putInt(0x06054b50); bb.putShort(0); bb.putShort(0)
-    bb.putShort(cds.size.toShort); bb.putShort(cds.size.toShort)
-    bb.putInt(cdSize); bb.putInt(cdStart); bb.putShort(0)
-    bos.write(bb.array())
-    bos.toByteArray
+    val cdSize = out.size - cdStart
+    out.u32le(0x06054b50).u16le(0).u16le(0).u16le(cds.size).u16le(cds.size)
+      .u32le(cdSize).u32le(cdStart).u16le(0)
+      .toArray
   }
 
   /** Read a ZIP the way unzip does: find the EOCD signature from the
@@ -1290,36 +1295,28 @@ object MmOps {
     * each member by recomputing CRC-32 over the stored payload reached
     * through its local header. Returns (nEntries, totalUncompressed,
     * cdSize, crcOk). */
-  private[graft] def parseZip(bytes: Array[Byte]): Option[(Int, Long, Int, Int)] = {
-    import java.nio.{ByteBuffer, ByteOrder}
-    def le32(i: Int): Int = ByteBuffer.wrap(bytes, i, 4).order(ByteOrder.LITTLE_ENDIAN).getInt
-    def le16(i: Int): Int =
-      ByteBuffer.wrap(bytes, i, 2).order(ByteOrder.LITTLE_ENDIAN).getShort & 0xffff
-    var e = bytes.length - 22
-    while (e >= 0 && le32(e) != 0x06054b50) e -= 1
-    if (e < 0) return None
-    val n = le16(e + 10)
-    val cdSize = le32(e + 12)
-    var i = le32(e + 16)
-    var total = 0L; var crcOk = 0; var k = 0
-    while (k < n) {
-      if (le32(i) != 0x02014b50) return None
-      val crc = le32(i + 16).toLong & 0xffffffffL
-      val size = le32(i + 24)
-      val nameLen = le16(i + 28)
-      val extraLen = le16(i + 30); val cmtLen = le16(i + 32)
-      val lho = le32(i + 42)
-      // local header: fixed 30 bytes + its own name/extra lengths
-      val dataOff = lho + 30 + le16(lho + 26) + le16(lho + 28)
-      val calc = new java.util.zip.CRC32()
-      calc.update(bytes, dataOff, size)
-      if (calc.getValue == crc) crcOk += 1
-      total += size
-      i += 46 + nameLen + extraLen + cmtLen
-      k += 1
+  private[graft] def parseZip(bytes: Array[Byte]): Option[(Int, Long, Int, Int)] =
+    walk(bytes) { r =>
+      var e = r.length - 22L
+      while (e >= 0 && r.u32le(e) != 0x06054b50L) e -= 1
+      need(e >= 0)
+      val n = r.u16le(e + 10)
+      var i = r.u32le(e + 16)
+      var total = 0L; var crcOk = 0
+      for (_ <- 0 until n) {
+        need(r.u32le(i) == 0x02014b50L)
+        val size = r.u32le(i + 24)
+        val lho = r.u32le(i + 42)
+        // local header: fixed 30 bytes + its own name/extra lengths
+        val dataOff = lho + 30 + r.u16le(lho + 26) + r.u16le(lho + 28)
+        val calc = new java.util.zip.CRC32()
+        calc.update(bytes, r.at(dataOff, size), size.toInt)
+        if (calc.getValue == r.u32le(i + 16)) crcOk += 1
+        total += size
+        i += 46 + r.u16le(i + 28) + r.u16le(i + 30) + r.u16le(i + 32) // name, extra, comment
+      }
+      Some((n, total, r.u32le(e + 12).toInt, crcOk))
     }
-    Some((n, total, cdSize, crcOk))
-  }
 
   /** ZIP central-directory walk — seventh container leg (the docx /
     * epub / apk family): per document a REAL store-method zip of the
@@ -1337,22 +1334,15 @@ object MmOps {
       |  CAST(2 AS INT) AS crc_ok
       |FROM documents ORDER BY doc_id""".stripMargin) { (s, d) =>
     val src = Tables.documents(s, d).select(col("doc_id"), col("text"), col("lang"))
-    val outSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("n_entries", IntegerType),
-      StructField("total_bytes", LongType), StructField("cd_size", IntegerType),
-      StructField("crc_ok", IntegerType)))
-    val enc = RowEncoder.encoderFor(outSchema)
-    src.mapPartitions { rows =>
-      rows.map { r =>
-        val docId = r.getLong(0)
-        val zip = zipBytes(Seq(
-          s"$docId.txt" -> r.getString(1).getBytes("UTF-8"),
-          s"$docId.cls" -> r.getString(2).getBytes("UTF-8")))
-        val (n, total, cdSize, crcOk) = parseZip(zip).getOrElse(
-          throw new IllegalStateException(s"unreadable planted zip for doc $docId"))
-        Row(docId, n, total, cdSize, crcOk)
-      }
-    }(enc).orderBy(col("doc_id"))
+    plantedWalk(src,
+        "doc_id BIGINT, n_entries INT, total_bytes BIGINT, cd_size INT, crc_ok INT") { r =>
+      val docId = r.getLong(0)
+      val zip = zipBytes(Seq(
+        s"$docId.txt" -> r.getString(1).getBytes("UTF-8"),
+        s"$docId.cls" -> r.getString(2).getBytes("UTF-8")))
+      val (n, total, cdSize, crcOk) = planted("zip", docId)(parseZip(zip))
+      Row(docId, n, total, cdSize, crcOk)
+    }
   }
 
   /** Build a minimal REAL PDF: header, catalog → pages → N page
@@ -1384,46 +1374,43 @@ object MmOps {
     * offset), then trailer /Root → catalog → /Pages → /Count and the
     * first page's /MediaBox. Returns (version, nObjects, nPages,
     * width, height, xrefOk); None when the tail/table is malformed. */
-  private[graft] def parsePdf(bytes: Array[Byte]): Option[(String, Int, Int, Int, Int, Boolean)] = {
-    val s = new String(bytes, "US-ASCII")
-    if (!s.startsWith("%PDF-")) return None
-    val version = s.substring(5, 8)
-    val sx = s.lastIndexOf("startxref")
-    if (sx < 0) return None
-    val xrefOff = s.substring(sx + 9).trim.takeWhile(_.isDigit).toInt
-    if (xrefOff >= s.length || !s.startsWith("xref", xrefOff)) return None
-    val afterXref = s.indexOf('\n', xrefOff) + 1
-    val header = s.substring(afterXref, s.indexOf('\n', afterXref)).trim.split(" ")
-    val size = header(1).toInt
-    val entries0 = s.indexOf('\n', afterXref) + 1
-    var xrefOk = true
-    var i = 1 // entry 0 is the free head
-    while (i < size) {
-      val e = s.substring(entries0 + i * 20, entries0 + i * 20 + 20)
-      val off = e.substring(0, 10).toInt
-      if (e.charAt(17) != 'n' || !s.startsWith(s"$i 0 obj", off)) xrefOk = false
-      i += 1
+  private[graft] def parsePdf(bytes: Array[Byte]): Option[(String, Int, Int, Int, Int, Boolean)] =
+    walk(bytes) { r =>
+      val s = new String(bytes, US_ASCII) // one char per byte: s's indexes are r's offsets
+      def int(digits: String): Int = digits.toIntOption.getOrElse(malformed)
+      def ints(re: String, in: String): Seq[Int] =
+        re.r.findFirstMatchIn(in).getOrElse(malformed).subgroups.map(int)
+      need(s.startsWith("%PDF-"))
+      val sx = s.lastIndexOf("startxref")
+      need(sx >= 0)
+      val xrefOff = int(s.substring(sx + 9).trim.takeWhile(_.isDigit))
+      need(s.startsWith("xref", xrefOff))
+      val afterXref = s.indexOf('\n', xrefOff) + 1
+      val entries0 = s.indexOf('\n', afterXref) + 1
+      val header = r.ascii(afterXref, entries0 - 1 - afterXref).trim.split(" ")
+      need(header.length >= 2)
+      val size = int(header(1))
+      var xrefOk = true
+      var i = 1 // entry 0 is the free head
+      while (i < size) {
+        val e = r.ascii(entries0 + i * 20L, 20)
+        if (e.charAt(17) != 'n' || !s.startsWith(s"$i 0 obj", int(e.substring(0, 10)))) xrefOk = false
+        i += 1
+      }
+      val trailer = s.indexOf("trailer", entries0)
+      need(trailer >= 0)
+      def objBody(id: Int): String = {
+        val start = s.indexOf(s"$id 0 obj")
+        if (start < 0) "" else r.ascii(start, s.indexOf("endobj", start) - start)
+      }
+      val Seq(root) = ints("""/Root (\d+) 0 R""", s.substring(trailer))
+      val Seq(pagesRef) = ints("""/Pages (\d+) 0 R""", objBody(root))
+      val pagesObj = objBody(pagesRef)
+      val Seq(count) = ints("""/Count (\d+)""", pagesObj)
+      val Seq(firstKid) = ints("""/Kids \[(\d+) 0 R""", pagesObj)
+      val Seq(w, h) = ints("""/MediaBox \[0 0 (\d+) (\d+)\]""", objBody(firstKid))
+      Some((r.ascii(5, 3), size - 1, count, w, h, xrefOk))
     }
-    val trailer = s.indexOf("trailer", entries0)
-    if (trailer < 0) return None
-    val root = """/Root (\d+) 0 R""".r.findFirstMatchIn(s.substring(trailer))
-      .map(_.group(1).toInt).getOrElse(return None)
-    def objBody(id: Int): String = {
-      val start = s.indexOf(s"$id 0 obj")
-      if (start < 0) return ""
-      s.substring(start, s.indexOf("endobj", start))
-    }
-    val pagesRef = """/Pages (\d+) 0 R""".r.findFirstMatchIn(objBody(root))
-      .map(_.group(1).toInt).getOrElse(return None)
-    val pagesObj = objBody(pagesRef)
-    val count = """/Count (\d+)""".r.findFirstMatchIn(pagesObj)
-      .map(_.group(1).toInt).getOrElse(return None)
-    val firstKid = """/Kids \[(\d+) 0 R""".r.findFirstMatchIn(pagesObj)
-      .map(_.group(1).toInt).getOrElse(return None)
-    val mb = """/MediaBox \[0 0 (\d+) (\d+)\]""".r.findFirstMatchIn(objBody(firstKid))
-      .getOrElse(return None)
-    Some((version, size - 1, count, mb.group(1).toInt, mb.group(2).toInt, xrefOk))
-  }
 
   /** PDF xref walk — eighth container leg, the DOCUMENT container a
     * text-extraction pipeline meets first: per doc a REAL minimal PDF
@@ -1444,22 +1431,14 @@ object MmOps {
       |  CAST(1 AS INT) AS xref_ok
       |FROM documents ORDER BY doc_id""".stripMargin) { (s, d) =>
     val src = Tables.documents(s, d).select(col("doc_id"))
-    val outSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("version", StringType),
-      StructField("n_objects", IntegerType), StructField("n_pages", IntegerType),
-      StructField("width", IntegerType), StructField("height", IntegerType),
-      StructField("xref_ok", IntegerType)))
-    val enc = RowEncoder.encoderFor(outSchema)
-    src.mapPartitions { rows =>
-      rows.map { r =>
-        val docId = r.getLong(0)
-        val pdf = pdfBytes((1 + docId % 4).toInt, (400 + docId % 200).toInt,
-          (500 + (docId / 7) % 300).toInt)
-        val (v, no, np, w, h, ok) = parsePdf(pdf).getOrElse(
-          throw new IllegalStateException(s"unreadable planted PDF for doc $docId"))
-        Row(docId, v, no, np, w, h, if (ok) 1 else 0)
-      }
-    }(enc).orderBy(col("doc_id"))
+    plantedWalk(src, "doc_id BIGINT, version STRING, n_objects INT, n_pages INT, width INT, " +
+        "height INT, xref_ok INT") { r =>
+      val docId = r.getLong(0)
+      val pdf = pdfBytes((1 + docId % 4).toInt, (400 + docId % 200).toInt,
+        (500 + (docId / 7) % 300).toInt)
+      val (v, no, np, w, h, ok) = planted("PDF", docId)(parsePdf(pdf))
+      Row(docId, v, no, np, w, h, if (ok) 1 else 0)
+    }
   }
 
   /** Mixed-corpus container census — the composition op over ALL
@@ -1483,29 +1462,23 @@ object MmOps {
       |  CAST(count(*) AS BIGINT) AS parsed_ok
       |FROM f GROUP BY 1 ORDER BY format""".stripMargin) { (s, d) =>
     val src = Tables.documents(s, d).select(col("doc_id"))
-    val outSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("format", StringType),
-      StructField("ok", IntegerType)))
-    val enc = RowEncoder.encoderFor(outSchema)
-    src.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val (fmt, ok) = (id % 8) match {
-          case 0 => "png" -> parsePngChunks(syntheticPng(id)).isDefined
-          case 1 => "gif" -> parseGifMeta(syntheticGif(id)).isDefined
-          case 2 => "jpeg" -> parseJpegMeta(syntheticJpeg((8 + id % 8).toInt, 8)).isDefined
-          case 3 => "wav" -> parseWavHeader(wavBytes(8000,
-            Array.tabulate(16)(i => ((id + i) % 256).toShort))).isDefined
-          case 4 => "mp4" -> parseMp4Meta(mp4Bytes("isom", 1000, (id % 5000).toInt)).isDefined
-          case 5 => "tar" -> parseTar(tarBytes(Seq(
-            s"$id.txt" -> s"doc $id".getBytes("UTF-8")))).isDefined
-          case 6 => "zip" -> parseZip(zipBytes(Seq(
-            s"$id.txt" -> s"doc $id".getBytes("UTF-8")))).isDefined
-          case _ => "pdf" -> parsePdf(pdfBytes((1 + id % 3).toInt, 612, 792)).isDefined
-        }
-        Row(id, fmt, if (ok) 1 else 0)
+    rowsOf(src, "doc_id BIGINT, format STRING, ok INT") { r =>
+      val id = r.getLong(0)
+      val (fmt, ok) = (id % 8) match {
+        case 0 => "png" -> parsePngChunks(syntheticPng(id)).isDefined
+        case 1 => "gif" -> parseGifMeta(syntheticGif(id)).isDefined
+        case 2 => "jpeg" -> parseJpegMeta(syntheticJpeg((8 + id % 8).toInt, 8)).isDefined
+        case 3 => "wav" -> parseWavHeader(wavBytes(8000,
+          Array.tabulate(16)(i => ((id + i) % 256).toShort))).isDefined
+        case 4 => "mp4" -> parseMp4Meta(mp4Bytes("isom", 1000, (id % 5000).toInt)).isDefined
+        case 5 => "tar" -> parseTar(tarBytes(Seq(
+          s"$id.txt" -> s"doc $id".getBytes("UTF-8")))).isDefined
+        case 6 => "zip" -> parseZip(zipBytes(Seq(
+          s"$id.txt" -> s"doc $id".getBytes("UTF-8")))).isDefined
+        case _ => "pdf" -> parsePdf(pdfBytes((1 + id % 3).toInt, 612, 792)).isDefined
       }
-    }(enc)
+      Row(id, fmt, if (ok) 1 else 0)
+    }
       .groupBy(col("format"))
       .agg(count(lit(1)).as("n_docs"), sum(col("ok")).cast(LongType).as("parsed_ok"))
       .orderBy(col("format"))
@@ -1540,27 +1513,25 @@ object MmOps {
     * field (the real parser discipline — no trust in caller-known
     * frame counts): (bitrate_kbps, sample_rate, n_frames), or None on
     * a bad sync / inconsistent parameters. */
-  private[graft] def parseMp3(bytes: Array[Byte]): Option[(Int, Int, Int)] = {
-    var o = 0
-    var n = 0
-    var kbps = -1
-    var rate = -1
-    while (o + 4 <= bytes.length) {
-      if (bytes(o) != 0xFF.toByte || (bytes(o + 1) & 0xFE) != 0xFA) return None
-      val bIdx = (bytes(o + 2) >> 4) & 0xF
-      val rIdx = (bytes(o + 2) >> 2) & 0x3
-      if (bIdx == 0 || bIdx == 15 || rIdx == 3) return None
-      val k = Mp3Bitrates(bIdx)
-      val r = Mp3Rates(rIdx)
-      if (kbps == -1) { kbps = k; rate = r }
-      else if (kbps != k || rate != r) return None
-      val frameLen = 144000 * k / r + ((bytes(o + 2) >> 1) & 1)
-      if (frameLen < 4) return None
-      o += frameLen
-      n += 1
+  private[graft] def parseMp3(bytes: Array[Byte]): Option[(Int, Int, Int)] =
+    walk(bytes) { r =>
+      var o = 0L
+      var n = 0
+      var kbps = -1
+      var rate = -1
+      while (o + 4 <= r.length) {
+        need(r.u8(o) == 0xFF && (r.u8(o + 1) & 0xFE) == 0xFA)
+        val flags = r.u8(o + 2) // bitrate index(4) rate index(2) padding(1)
+        val (bIdx, rIdx) = (flags >> 4, (flags >> 2) & 0x3)
+        need(bIdx != 0 && bIdx != 15 && rIdx != 3)
+        val (k, hz) = (Mp3Bitrates(bIdx), Mp3Rates(rIdx))
+        if (kbps == -1) { kbps = k; rate = hz }
+        else need(kbps == k && rate == hz)
+        o += 144000 * k / hz + ((flags >> 1) & 1) // at least 96 bytes
+        n += 1
+      }
+      if (n == 0 || o != r.length) None else Some((kbps, rate, n))
     }
-    if (n == 0 || o != bytes.length) None else Some((kbps, rate, n))
-  }
 
   /** MP3 frame-sync walk — the ninth container leg (compressed-audio
     * metadata next to WAV's PCM): hash-derived parameters → a genuine
@@ -1593,21 +1564,12 @@ object MmOps {
         (lit(1) + h % 14).cast(IntegerType).as("b_idx"),
         (shiftright(h, 4) % 3).cast(IntegerType).as("r_idx"),
         (lit(50) + shiftright(h, 6) % 200).cast(IntegerType).as("n_frames"))
-    val outSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("bitrate_kbps", IntegerType),
-      StructField("sample_rate", IntegerType),
-      StructField("n_frames", IntegerType),
-      StructField("duration_ms", LongType)))
-    val enc = RowEncoder.encoderFor(outSchema)
-    params.mapPartitions { rows =>
-      rows.map { r =>
-        val stream = mp3Stream(r.getInt(1), r.getInt(2), r.getInt(3))
-        val (kbps, rate, n) = parseMp3(stream).getOrElse(
-          throw new IllegalStateException(s"unparseable planted MP3 for doc ${r.getLong(0)}"))
-        Row(r.getLong(0), kbps, rate, n, n.toLong * 1152 * 1000 / rate)
-      }
-    }(enc).orderBy(col("doc_id"))
+    plantedWalk(params,
+        "doc_id BIGINT, bitrate_kbps INT, sample_rate INT, n_frames INT, duration_ms BIGINT") { r =>
+      val stream = mp3Stream(r.getInt(1), r.getInt(2), r.getInt(3))
+      val (kbps, rate, n) = planted("MP3", r.getLong(0))(parseMp3(stream))
+      Row(r.getLong(0), kbps, rate, n, n.toLong * 1152 * 1000 / rate)
+    }
   }
 
   /** Build a REAL ID3v2.3 tag (10-byte header with a SYNCSAFE 28-bit
@@ -1619,24 +1581,16 @@ object MmOps {
       nFrames: Int): Array[Byte] = {
     val frameBody = 1 + titleLen // encoding byte + latin-1 title
     val tagBody = 10 + frameBody // one TIT2 frame header + body
-    val tag = new Array[Byte](10 + tagBody)
-    tag(0) = 'I'; tag(1) = 'D'; tag(2) = '3'
-    tag(3) = 3; tag(4) = 0 // v2.3.0
-    tag(5) = 0 // no unsync/extended-header/experimental flags
-    tag(6) = ((tagBody >> 21) & 0x7F).toByte
-    tag(7) = ((tagBody >> 14) & 0x7F).toByte
-    tag(8) = ((tagBody >> 7) & 0x7F).toByte
-    tag(9) = (tagBody & 0x7F).toByte
-    tag(10) = 'T'; tag(11) = 'I'; tag(12) = 'T'; tag(13) = '2'
-    tag(14) = ((frameBody >>> 24) & 0xFF).toByte
-    tag(15) = ((frameBody >>> 16) & 0xFF).toByte
-    tag(16) = ((frameBody >>> 8) & 0xFF).toByte
-    tag(17) = (frameBody & 0xFF).toByte
-    tag(18) = 0; tag(19) = 0 // frame flags
-    tag(20) = 0 // ISO-8859-1 text encoding
-    var i = 0
-    while (i < titleLen) { tag(21 + i) = ('A' + (titleLen + i) % 26).toByte; i += 1 }
-    tag ++ mp3Stream(bitrateIdx, rateIdx, nFrames)
+    new Writer()
+      .ascii("ID3").u8(3).u8(0) // v2.3.0
+      .u8(0) // no unsync/extended-header/experimental flags
+      .u8(tagBody >> 21 & 0x7F).u8(tagBody >> 14 & 0x7F).u8(tagBody >> 7 & 0x7F).u8(tagBody & 0x7F)
+      .ascii("TIT2").u32be(frameBody)
+      .u16be(0) // frame flags
+      .u8(0) // ISO-8859-1 text encoding
+      .bytes(Array.tabulate[Byte](titleLen)(i => ('A' + (titleLen + i) % 26).toByte))
+      .bytes(mp3Stream(bitrateIdx, rateIdx, nFrames))
+      .toArray
   }
 
   /** Walk an ID3v2-tagged MP3: validate the ID3 header, decode the
@@ -1645,30 +1599,20 @@ object MmOps {
     * validate the single TIT2 frame fills the tag body exactly, then
     * hand the remainder to [[parseMp3]]'s sync walk. Returns
     * (tag_bytes, title_len, bitrate_kbps, sample_rate, n_frames). */
-  private[graft] def parseId3Mp3(bytes: Array[Byte]): Option[(Int, Int, Int, Int, Int)] = {
-    if (bytes.length < 21) return None
-    if (bytes(0) != 'I' || bytes(1) != 'D' || bytes(2) != '3') return None
-    if (bytes(3) != 3 || bytes(4) != 0 || bytes(5) != 0) return None
-    var size = 0
-    var i = 6
-    while (i < 10) {
-      val b = bytes(i) & 0xFF
-      if ((b & 0x80) != 0) return None // syncsafe bytes carry 7 bits
-      size = (size << 7) | b
-      i += 1
+  private[graft] def parseId3Mp3(bytes: Array[Byte]): Option[(Int, Int, Int, Int, Int)] =
+    walk(bytes) { r =>
+      need(r.ascii(0, 3) == "ID3" && r.u8(3) == 3 && r.u8(4) == 0 && r.u8(5) == 0)
+      val sizeBytes = (6 until 10).map(r.u8(_))
+      need(sizeBytes.forall(_ < 0x80)) // syncsafe bytes carry 7 bits
+      val size = sizeBytes.foldLeft(0)((acc, b) => acc << 7 | b)
+      val tagEnd = r.at(10 + size, 0) // the tag ends inside the blob
+      need(r.fourcc(10) == "TIT2" && r.u16be(18) == 0)
+      val frameBody = r.u32be(14)
+      need(10 + frameBody == size) // the one frame fills the body
+      need(r.u8(20) == 0) // ISO-8859-1 only
+      parseMp3(java.util.Arrays.copyOfRange(bytes, tagEnd, bytes.length))
+        .map { case (kbps, rate, n) => (tagEnd, (frameBody - 1).toInt, kbps, rate, n) }
     }
-    val tagEnd = 10 + size
-    if (tagEnd > bytes.length) return None
-    if (bytes(10) != 'T' || bytes(11) != 'I' || bytes(12) != 'T' || bytes(13) != '2')
-      return None
-    val frameBody = ((bytes(14) & 0xFF) << 24) | ((bytes(15) & 0xFF) << 16) |
-      ((bytes(16) & 0xFF) << 8) | (bytes(17) & 0xFF)
-    if (bytes(18) != 0 || bytes(19) != 0) return None
-    if (10 + frameBody != size) return None // the one frame fills the body
-    if (bytes(20) != 0) return None // ISO-8859-1 only
-    parseMp3(java.util.Arrays.copyOfRange(bytes, tagEnd, bytes.length))
-      .map { case (kbps, rate, n) => (tagEnd, frameBody - 1, kbps, rate, n) }
-  }
 
   /** ID3v2 tag walk over tagged MP3s — the twelfth container leg, and
     * the only one exercising SYNCSAFE integers (ID3's 7-bit size
@@ -1698,22 +1642,12 @@ object MmOps {
         (lit(1) + shiftright(h, 2) % 14).cast(IntegerType).as("b_idx"),
         (shiftright(h, 4) % 3).cast(IntegerType).as("r_idx"),
         (lit(20) + shiftright(h, 6) % 100).cast(IntegerType).as("n_frames"))
-    val outSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("tag_bytes", IntegerType),
-      StructField("title_len", IntegerType),
-      StructField("bitrate_kbps", IntegerType),
-      StructField("sample_rate", IntegerType),
-      StructField("n_frames", IntegerType)))
-    val enc = RowEncoder.encoderFor(outSchema)
-    params.mapPartitions { rows =>
-      rows.map { r =>
-        val stream = id3Mp3Stream(r.getInt(1), r.getInt(2), r.getInt(3), r.getInt(4))
-        val (tagBytes, titleLen, kbps, rate, n) = parseId3Mp3(stream).getOrElse(
-          throw new IllegalStateException(s"unparseable planted ID3 MP3 for doc ${r.getLong(0)}"))
-        Row(r.getLong(0), tagBytes, titleLen, kbps, rate, n)
-      }
-    }(enc).orderBy(col("doc_id"))
+    plantedWalk(params, "doc_id BIGINT, tag_bytes INT, title_len INT, bitrate_kbps INT, " +
+        "sample_rate INT, n_frames INT") { r =>
+      val stream = id3Mp3Stream(r.getInt(1), r.getInt(2), r.getInt(3), r.getInt(4))
+      val (tagBytes, titleLen, kbps, rate, n) = planted("ID3 MP3", r.getLong(0))(parseId3Mp3(stream))
+      Row(r.getLong(0), tagBytes, titleLen, kbps, rate, n)
+    }
   }
 
   /** Build a REAL FLAC header: "fLaC" magic + a last-flagged
@@ -1723,40 +1657,30 @@ object MmOps {
     * zero MD5). */
   private[graft] def flacHeader(sampleRate: Int, channels: Int, bps: Int,
       totalSamples: Long): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(4 + 4 + 34)
-    bb.put("fLaC".getBytes("US-ASCII"))
-    bb.put((0x80).toByte) // last-metadata-block | type 0 (STREAMINFO)
-    bb.put(0.toByte).put(0.toByte).put(34.toByte) // 24-bit length
-    bb.putShort(4096.toShort).putShort(4096.toShort) // min/max blocksize
-    bb.put(0.toByte).put(0.toByte).put(0.toByte) // min framesize (unknown)
-    bb.put(0.toByte).put(0.toByte).put(0.toByte) // max framesize (unknown)
     val group = (sampleRate.toLong << 44) | ((channels - 1).toLong << 41) |
       ((bps - 1).toLong << 36) | (totalSamples & 0xFFFFFFFFFL)
-    bb.putLong(group)
-    bb.put(new Array[Byte](16)) // md5 of raw audio (zeros: unknown)
-    bb.array()
+    new Writer().ascii("fLaC")
+      .u8(0x80) // last-metadata-block | type 0 (STREAMINFO)
+      .u8(0).u16be(34) // 24-bit length
+      .u16be(4096).u16be(4096) // min/max blocksize
+      .zeros(6) // min/max framesize (unknown)
+      .u64be(group)
+      .zeros(16) // md5 of raw audio (zeros: unknown)
+      .toArray
   }
 
   /** Parse a FLAC STREAMINFO header: (sampleRate, channels, bps,
     * totalSamples), or None when magic/type/length don't check out. */
-  private[graft] def parseFlacHeader(bytes: Array[Byte]): Option[(Int, Int, Int, Long)] = {
-    if (bytes.length < 42) return None
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    val magic = new Array[Byte](4); bb.get(magic)
-    if (new String(magic, "US-ASCII") != "fLaC") return None
-    val header = bb.get()
-    if ((header & 0x7F) != 0) return None // STREAMINFO must be type 0
-    val len = ((bb.get() & 0xFF) << 16) | ((bb.get() & 0xFF) << 8) | (bb.get() & 0xFF)
-    if (len != 34) return None
-    bb.getShort; bb.getShort // blocksizes
-    bb.position(bb.position() + 6) // framesizes
-    val group = bb.getLong
-    val rate = (group >>> 44).toInt
-    val channels = ((group >>> 41) & 0x7).toInt + 1
-    val bps = ((group >>> 36) & 0x1F).toInt + 1
-    val total = group & 0xFFFFFFFFFL
-    Some((rate, channels, bps, total))
-  }
+  private[graft] def parseFlacHeader(bytes: Array[Byte]): Option[(Int, Int, Int, Long)] =
+    walk(bytes) { r =>
+      need(r.fourcc(0) == "fLaC")
+      need((r.u8(4) & 0x7F) == 0) // STREAMINFO must be type 0
+      need((r.u8(5) << 16 | r.u16be(6)) == 34) // 24-bit block length
+      r.at(8, 34) // the whole block is present
+      val group = r.u64be(18) // after the blocksizes and framesizes
+      Some(((group >>> 44).toInt, ((group >>> 41) & 0x7).toInt + 1,
+        ((group >>> 36) & 0x1F).toInt + 1, group & 0xFFFFFFFFFL))
+    }
 
   /** FLAC STREAMINFO walk — the tenth container leg (lossless-audio
     * metadata): hash-derived parameters → genuine fLaC magic +
@@ -1784,22 +1708,12 @@ object MmOps {
         (lit(1) + shiftright(h, 3) % 2).cast(IntegerType).as("channels"),
         when(shiftright(h, 5) % 2 === 0, 16).otherwise(24).as("bps"),
         (lit(10000L) + shiftright(h, 7) % 100000).cast(LongType).as("total_samples"))
-    val outSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("sample_rate", IntegerType),
-      StructField("channels", IntegerType),
-      StructField("bps", IntegerType),
-      StructField("total_samples", LongType),
-      StructField("duration_ms", LongType)))
-    val enc = RowEncoder.encoderFor(outSchema)
-    params.mapPartitions { rows =>
-      rows.map { r =>
-        val header = flacHeader(r.getInt(1), r.getInt(2), r.getInt(3), r.getLong(4))
-        val (rate, ch, bps, total) = parseFlacHeader(header).getOrElse(
-          throw new IllegalStateException(s"unparseable planted FLAC for doc ${r.getLong(0)}"))
-        Row(r.getLong(0), rate, ch, bps, total, total * 1000 / rate)
-      }
-    }(enc).orderBy(col("doc_id"))
+    plantedWalk(params, "doc_id BIGINT, sample_rate INT, channels INT, bps INT, " +
+        "total_samples BIGINT, duration_ms BIGINT") { r =>
+      val header = flacHeader(r.getInt(1), r.getInt(2), r.getInt(3), r.getLong(4))
+      val (rate, ch, bps, total) = planted("FLAC", r.getLong(0))(parseFlacHeader(header))
+      Row(r.getLong(0), rate, ch, bps, total, total * 1000 / rate)
+    }
   }
 
   /** Build a REAL Exif APP1 segment inside a minimal JPEG: SOI, APP1
@@ -1809,83 +1723,68 @@ object MmOps {
     * spec — the byte-order-dependent detail the parser must honor. */
   private[graft] def exifJpeg(littleEndian: Boolean, orientation: Int,
       pixX: Int, pixY: Int): Array[Byte] = {
-    val order = if (littleEndian) java.nio.ByteOrder.LITTLE_ENDIAN
-                else java.nio.ByteOrder.BIG_ENDIAN
-    val tiff = java.nio.ByteBuffer.allocate(8 + 2 + 3 * 12 + 4).order(order)
-    tiff.put((if (littleEndian) "II" else "MM").getBytes("US-ASCII"))
-    tiff.putShort(42.toShort)
-    tiff.putInt(8) // IFD0 right after the header
-    tiff.putShort(3.toShort) // entry count
-    // entries must be tag-sorted: 0x0112 < 0xA002 < 0xA003
-    tiff.putShort(0x0112.toShort).putShort(3.toShort).putInt(1) // Orientation SHORT
-    tiff.putShort(orientation.toShort).putShort(0.toShort)      // left-justified value
-    tiff.putShort(0xA002.toShort).putShort(4.toShort).putInt(1).putInt(pixX) // LONG
-    tiff.putShort(0xA003.toShort).putShort(4.toShort).putInt(1).putInt(pixY) // LONG
-    tiff.putInt(0) // no next IFD
-    val payload = "Exif".getBytes("US-ASCII") ++ Array[Byte](0, 0) ++ tiff.array()
-    val out = java.nio.ByteBuffer.allocate(2 + 4 + payload.length + 2)
-    out.put(0xFF.toByte).put(0xD8.toByte) // SOI
-    out.put(0xFF.toByte).put(0xE1.toByte) // APP1
-    out.putShort((payload.length + 2).toShort) // segment length incl. itself (BE)
-    out.put(payload)
-    out.put(0xFF.toByte).put(0xD9.toByte) // EOI
-    out.array()
+    val le = littleEndian
+    val tiff = new Writer().ascii(if (le) "II" else "MM")
+      .u16(42, le)
+      .u32(8, le) // IFD0 right after the header
+      .u16(3, le) // entry count
+      // entries must be tag-sorted: 0x0112 < 0xA002 < 0xA003
+      .u16(0x0112, le).u16(3, le).u32(1, le) // Orientation SHORT
+      .u16(orientation, le).u16(0, le)      // left-justified value
+      .u16(0xA002, le).u16(4, le).u32(1, le).u32(pixX, le) // LONG
+      .u16(0xA003, le).u16(4, le).u32(1, le).u32(pixY, le) // LONG
+      .u32(0, le) // no next IFD
+      .toArray
+    new Writer()
+      .u8(0xFF).u8(0xD8) // SOI
+      .u8(0xFF).u8(0xE1) // APP1
+      .u16be(6 + tiff.length + 2) // segment length incl. itself (BE)
+      .ascii("Exif").zeros(2).bytes(tiff)
+      .u8(0xFF).u8(0xD9) // EOI
+      .toArray
   }
 
   /** Parse Exif out of a JPEG marker stream: find APP1/"Exif", read
     * the TIFF header's byte order, walk IFD0, return
     * (byteOrder, orientation, pixX, pixY) — SHORT reads honor the
     * left-justified value-field rule. */
-  private[graft] def parseExif(bytes: Array[Byte]): Option[(String, Int, Int, Int)] = {
-    if (bytes.length < 4 || (bytes(0) & 0xFF) != 0xFF || (bytes(1) & 0xFF) != 0xD8) return None
-    var i = 2
-    while (i + 4 <= bytes.length) {
-      if ((bytes(i) & 0xFF) != 0xFF) return None
-      val marker = bytes(i + 1) & 0xFF
-      if (marker == 0xD9) return None // EOI before APP1
-      val segLen = ((bytes(i + 2) & 0xFF) << 8) | (bytes(i + 3) & 0xFF)
-      if (marker == 0xE1 && segLen >= 8 &&
-          new String(bytes, i + 4, 4, "US-ASCII") == "Exif") {
-        val t0 = i + 10 // TIFF header start (skip Exif\0\0)
-        val bo = new String(bytes, t0, 2, "US-ASCII")
-        val le = bo match {
-          case "II" => true
-          case "MM" => false
-          case _ => return None
-        }
-        def u16(o: Int): Int =
-          if (le) (bytes(o) & 0xFF) | ((bytes(o + 1) & 0xFF) << 8)
-          else ((bytes(o) & 0xFF) << 8) | (bytes(o + 1) & 0xFF)
-        def u32(o: Int): Int =
-          if (le) (bytes(o) & 0xFF) | ((bytes(o + 1) & 0xFF) << 8) |
-            ((bytes(o + 2) & 0xFF) << 16) | ((bytes(o + 3) & 0xFF) << 24)
-          else ((bytes(o) & 0xFF) << 24) | ((bytes(o + 1) & 0xFF) << 16) |
-            ((bytes(o + 2) & 0xFF) << 8) | (bytes(o + 3) & 0xFF)
-        if (u16(t0 + 2) != 42) return None
-        val ifd = t0 + u32(t0 + 4)
-        val n = u16(ifd)
+  private[graft] def parseExif(bytes: Array[Byte]): Option[(String, Int, Int, Int)] =
+    walk(bytes) { r =>
+      // the IFD0 entries of the TIFF header at t0, in its own byte order
+      def tiff(t0: Long): (String, Int, Int, Int) = {
+        val bo = r.ascii(t0, 2)
+        need(bo == "II" || bo == "MM")
+        val le = bo == "II"
+        need(r.u16(t0 + 2, le) == 42)
+        val ifd = t0 + r.u32(t0 + 4, le)
         var (ori, px, py) = (-1, -1, -1)
-        var e = 0
-        while (e < n) {
-          val eo = ifd + 2 + e * 12
-          val tag = u16(eo)
-          val typ = u16(eo + 2)
+        for (e <- 0 until r.u16(ifd, le)) {
+          val eo = ifd + 2 + e * 12L
           val vo = eo + 8
-          tag match {
-            case 0x0112 if typ == 3 => ori = u16(vo) // SHORT, left-justified
-            case 0xA002 if typ == 4 => px = u32(vo)
-            case 0xA003 if typ == 4 => py = u32(vo)
+          (r.u16(eo, le), r.u16(eo + 2, le)) match { // (tag, type)
+            case (0x0112, 3) => ori = r.u16(vo, le) // SHORT, left-justified
+            case (0xA002, 4) => px = r.u32(vo, le).toInt
+            case (0xA003, 4) => py = r.u32(vo, le).toInt
             case _ =>
           }
-          e += 1
         }
-        if (ori < 0 || px < 0 || py < 0) return None
-        return Some((bo, ori, px, py))
+        need(ori >= 0 && px >= 0 && py >= 0)
+        (bo, ori, px, py)
       }
-      i += 2 + segLen
+      need(r.u8(0) == 0xFF && r.u8(1) == 0xD8)
+      var i = 2L
+      var found = Option.empty[(String, Int, Int, Int)]
+      while (found.isEmpty) { // ends at APP1/Exif, or malformed at EOI or the blob's end
+        need(r.u8(i) == 0xFF)
+        val marker = r.u8(i + 1)
+        need(marker != 0xD9) // EOI before APP1
+        val segLen = r.u16be(i + 2)
+        if (marker == 0xE1 && segLen >= 8 && r.fourcc(i + 4) == "Exif")
+          found = Some(tiff(i + 10)) // TIFF header start (skip Exif\0\0)
+        else i += 2 + segLen
+      }
+      found
     }
-    None
-  }
 
   /** EXIF orientation + pixel dimensions — the eleventh container
     * leg, and the only one where BYTE ORDER is data-dependent: half
@@ -1909,21 +1808,12 @@ object MmOps {
         (lit(1) + shiftright(h, 1) % 8).cast(IntegerType).as("orientation"),
         (lit(16) + shiftright(h, 4) % 1024).cast(IntegerType).as("pix_x"),
         (lit(16) + shiftright(h, 14) % 1024).cast(IntegerType).as("pix_y"))
-    val outSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("byte_order", StringType),
-      StructField("orientation", IntegerType),
-      StructField("pix_x", IntegerType),
-      StructField("pix_y", IntegerType)))
-    val enc = RowEncoder.encoderFor(outSchema)
-    params.mapPartitions { rows =>
-      rows.map { r =>
-        val jpeg = exifJpeg(r.getBoolean(1), r.getInt(2), r.getInt(3), r.getInt(4))
-        val (bo, ori, px, py) = parseExif(jpeg).getOrElse(
-          throw new IllegalStateException(s"unwalkable planted Exif for doc ${r.getLong(0)}"))
-        Row(r.getLong(0), bo, ori, px, py)
-      }
-    }(enc).orderBy(col("doc_id"))
+    plantedWalk(params,
+        "doc_id BIGINT, byte_order STRING, orientation INT, pix_x INT, pix_y INT") { r =>
+      val jpeg = exifJpeg(r.getBoolean(1), r.getInt(2), r.getInt(3), r.getInt(4))
+      val (bo, ori, px, py) = planted("Exif", r.getLong(0))(parseExif(jpeg))
+      Row(r.getLong(0), bo, ori, px, py)
+    }
   }
 
   /** Build a RIFF/WEBP container: VP8X extended header (24-bit LE
@@ -1938,37 +1828,19 @@ object MmOps {
     val hasExif = docId % 3 == 0
     val exifLen = 8 + (docId % 8).toInt
     val vp8lLen = 5 + (docId % 32).toInt
-    val bos = new java.io.ByteArrayOutputStream()
-    def fourcc(s: String): Unit = bos.write(s.getBytes("US-ASCII"))
-    def le32(v: Int): Unit = { bos.write(v & 0xff); bos.write((v >> 8) & 0xff)
-      bos.write((v >> 16) & 0xff); bos.write((v >> 24) & 0xff) }
-    def chunk(cc: String, payload: Array[Byte]): Unit = {
-      fourcc(cc); le32(payload.length); bos.write(payload)
-      if (payload.length % 2 == 1) bos.write(0) // RIFF even-padding rule
-    }
-    val riffSize = 4 + 18 +
-      (if (hasExif) 8 + exifLen + exifLen % 2 else 0) + 8 + vp8lLen + vp8lLen % 2
-    fourcc("RIFF"); le32(riffSize); fourcc("WEBP")
-    val vp8x = new Array[Byte](10)
-    vp8x(0) = (if (hasExif) 0x08 else 0x00).toByte // EXIF flag bit
-    vp8x(4) = ((w - 1) & 0xff).toByte; vp8x(5) = (((w - 1) >> 8) & 0xff).toByte
-    vp8x(6) = (((w - 1) >> 16) & 0xff).toByte
-    vp8x(7) = ((h - 1) & 0xff).toByte; vp8x(8) = (((h - 1) >> 8) & 0xff).toByte
-    vp8x(9) = (((h - 1) >> 16) & 0xff).toByte
-    chunk("VP8X", vp8x)
-    if (hasExif) {
-      val exif = Array.tabulate[Byte](exifLen)(i => ((docId + i) % 251).toByte)
-      chunk("EXIF", exif)
-    }
-    val vp8l = new Array[Byte](vp8lLen)
-    vp8l(0) = 0x2f // VP8L signature
-    val dims = (w - 1) | ((h - 1) << 14) // 14-bit minus-one fields, version 0
-    vp8l(1) = (dims & 0xff).toByte; vp8l(2) = ((dims >> 8) & 0xff).toByte
-    vp8l(3) = ((dims >> 16) & 0xff).toByte; vp8l(4) = ((dims >> 24) & 0xff).toByte
-    var i = 5
-    while (i < vp8lLen) { vp8l(i) = ((docId * 7 + i) % 253).toByte; i += 1 }
-    chunk("VP8L", vp8l)
-    bos.toByteArray
+    val riffSize = 4 + 18 + (if (hasExif) 8 + even(exifLen) else 0) + 8 + even(vp8lLen)
+    val out = new Writer().ascii("RIFF").u32le(riffSize).ascii("WEBP")
+    out.chunk("VP8X", new Writer()
+      .u8(if (hasExif) 0x08 else 0x00).zeros(3) // EXIF flag bit, reserved
+      .u16le(w - 1).u8((w - 1) >> 16).u16le(h - 1).u8((h - 1) >> 16) // 24-bit canvas
+      .toArray)
+    if (hasExif) out.chunk("EXIF", Array.tabulate[Byte](exifLen)(i => ((docId + i) % 251).toByte))
+    out.chunk("VP8L", new Writer()
+      .u8(0x2f) // VP8L signature
+      .u32le((w - 1) | ((h - 1) << 14)) // 14-bit minus-one fields, version 0
+      .bytes(Array.tabulate[Byte](vp8lLen - 5)(i => ((docId * 7 + 5 + i) % 253).toByte))
+      .toArray)
+    out.toArray
   }
 
   /** Walk a RIFF/WEBP container: verify the RIFF magic, the WEBP form
@@ -1978,46 +1850,40 @@ object MmOps {
     * signature and that the bitstream's 14-bit dims REPEAT the canvas.
     * Returns (width, height, nChunks, hasExif, payloadBytes); None on
     * any structural lie (bad magic, size mismatch, truncation,
-    * canvas/bitstream disagreement). */
-  private[graft] def parseWebpMeta(bytes: Array[Byte]): Option[(Int, Int, Int, Boolean, Long)] = {
-    if (bytes.length < 30) return None
-    if (new String(bytes, 0, 4, "US-ASCII") != "RIFF") return None
-    def le32(o: Int): Int = (bytes(o) & 0xff) | ((bytes(o + 1) & 0xff) << 8) |
-      ((bytes(o + 2) & 0xff) << 16) | ((bytes(o + 3) & 0xff) << 24)
-    if (le32(4) != bytes.length - 8) return None
-    if (new String(bytes, 8, 4, "US-ASCII") != "WEBP") return None
-    var i = 12
-    var (w, h) = (-1, -1)
-    var nChunks = 0
-    var hasExif = false
-    var payload = 0L
-    while (i < bytes.length) {
-      if (i + 8 > bytes.length) return None // truncated chunk header
-      val cc = new String(bytes, i, 4, "US-ASCII")
-      val len = le32(i + 4)
-      if (len < 0 || i + 8 + len > bytes.length) return None
-      cc match {
-        case "VP8X" =>
-          if (nChunks != 0 || len != 10) return None // must lead, fixed size
-          hasExif = (bytes(i + 8) & 0x08) != 0
-          w = 1 + ((bytes(i + 12) & 0xff) | ((bytes(i + 13) & 0xff) << 8) |
-            ((bytes(i + 14) & 0xff) << 16))
-          h = 1 + ((bytes(i + 15) & 0xff) | ((bytes(i + 16) & 0xff) << 8) |
-            ((bytes(i + 17) & 0xff) << 16))
-        case "VP8L" =>
-          if (len < 5 || bytes(i + 8) != 0x2f) return None
-          val dims = le32(i + 9)
-          if (1 + (dims & 0x3fff) != w || 1 + ((dims >> 14) & 0x3fff) != h) return None
-        case "EXIF" => // presence must match the VP8X flag, checked below
-        case _ => return None // unknown chunk: malformed for this corpus
+    * canvas/bitstream disagreement, an EXIF chunk the VP8X flag does
+    * not announce or an announced one missing). */
+  private[graft] def parseWebpMeta(bytes: Array[Byte]): Option[(Int, Int, Int, Boolean, Long)] =
+    walk(bytes) { r =>
+      need(r.fourcc(0) == "RIFF" && r.u32le(4) == r.length - 8 && r.fourcc(8) == "WEBP")
+      var i = 12L
+      var (w, h) = (-1, -1)
+      var nChunks = 0
+      var hasExif = false
+      var sawExif = false
+      var payload = 0L
+      while (i < r.length) {
+        val len = r.u32le(i + 4)
+        r.at(i + 8, len) // the payload must fit
+        r.fourcc(i) match {
+          case "VP8X" =>
+            need(nChunks == 0 && len == 10) // must lead, fixed size
+            hasExif = (r.u8(i + 8) & 0x08) != 0
+            w = 1 + (r.u16le(i + 12) | r.u8(i + 14) << 16)
+            h = 1 + (r.u16le(i + 15) | r.u8(i + 17) << 16)
+          case "VP8L" =>
+            need(len >= 5 && r.u8(i + 8) == 0x2f)
+            val dims = r.u32le(i + 9)
+            need(1 + (dims & 0x3fff) == w && 1 + ((dims >> 14) & 0x3fff) == h)
+          case "EXIF" => sawExif = true // must match the VP8X flag
+          case _ => malformed // unknown chunk for this corpus
+        }
+        nChunks += 1
+        payload += len
+        i += 8 + even(len)
       }
-      nChunks += 1
-      payload += len
-      i += 8 + len + len % 2
+      if (w < 0 || nChunks < 2 || sawExif != hasExif) None
+      else Some((w, h, nChunks, hasExif, payload))
     }
-    if (w < 0 || nChunks < 2) return None
-    Some((w, h, nChunks, hasExif, payload))
-  }
 
   /** WebP/RIFF structural metadata — thirteenth container leg, and the
     * only RIFF-chunked one (WAV shares the family but mm_wav_meta
@@ -2040,19 +1906,12 @@ object MmOps {
       |       + 5 + doc_id % 32 AS BIGINT) AS payload_bytes
       |FROM documents ORDER BY doc_id""".stripMargin) { (s, d) =>
     val src = Tables.documents(s, d).select(col("doc_id"))
-    val outSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("width", IntegerType),
-      StructField("height", IntegerType), StructField("n_chunks", IntegerType),
-      StructField("has_exif", IntegerType), StructField("payload_bytes", LongType)))
-    val enc = RowEncoder.encoderFor(outSchema)
-    src.mapPartitions { rows =>
-      rows.map { r =>
-        val docId = r.getLong(0)
-        val (w, h, nc, exif, payload) = parseWebpMeta(syntheticWebp(docId)).getOrElse(
-          throw new IllegalStateException(s"unwalkable planted WebP for doc $docId"))
-        Row(docId, w, h, nc, if (exif) 1 else 0, payload)
-      }
-    }(enc).orderBy(col("doc_id"))
+    plantedWalk(src, "doc_id BIGINT, width INT, height INT, n_chunks INT, has_exif INT, " +
+        "payload_bytes BIGINT") { r =>
+      val docId = r.getLong(0)
+      val (w, h, nc, exif, payload) = planted("WebP", docId)(parseWebpMeta(syntheticWebp(docId)))
+      Row(docId, w, h, nc, if (exif) 1 else 0, payload)
+    }
   }
 
   /** Ogg page CRC: polynomial 0x04C11DB7, MSB-first (NON-reflected),
@@ -2088,29 +1947,20 @@ object MmOps {
     val p1 = 30 + (docId % 10).toInt
     val p2 = 200 + (docId % 300).toInt
     val serial = (docId % 1000 + 1).toInt
-    val bos = new java.io.ByteArrayOutputStream()
+    val out = new Writer()
     def page(headerType: Int, granule: Long, seq: Int, packetLen: Int): Unit = {
-      val lacing = new java.io.ByteArrayOutputStream()
-      var rest = packetLen
-      while (rest >= 255) { lacing.write(255); rest -= 255 }
-      lacing.write(rest) // terminator, 0 when packetLen % 255 == 0
-      val lac = lacing.toByteArray
-      val head = java.nio.ByteBuffer.allocate(27 + lac.length)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      head.put("OggS".getBytes("US-ASCII")).put(0.toByte)
-        .put(headerType.toByte).putLong(granule).putInt(serial).putInt(seq)
-        .putInt(0) // CRC placeholder
-        .put(lac.length.toByte).put(lac)
-      val payload = Array.tabulate[Byte](packetLen)(i => ((docId * 11 + i) % 251).toByte)
-      val full = head.array() ++ payload
-      val crc = oggCrc(full)
-      full(22) = (crc & 0xff).toByte; full(23) = ((crc >> 8) & 0xff).toByte
-      full(24) = ((crc >> 16) & 0xff).toByte; full(25) = ((crc >> 24) & 0xff).toByte
-      bos.write(full)
+      // 255s, then the terminator (0 when packetLen % 255 == 0)
+      val lacing = Array.fill[Byte](packetLen / 255)(-1) :+ (packetLen % 255).toByte
+      val head = new Writer().ascii("OggS").u8(0).u8(headerType).u64le(granule)
+        .u32le(serial).u32le(seq).toArray
+      val body = new Writer().u8(lacing.length).bytes(lacing)
+        .bytes(Array.tabulate[Byte](packetLen)(i => ((docId * 11 + i) % 251).toByte)).toArray
+      val crc = oggCrc(head ++ new Array[Byte](4) ++ body) // over the page, CRC field zeroed
+      out.bytes(head).u32le(crc).bytes(body)
     }
     page(0x02, 0L, 0, p1)                   // BOS
     page(0x04, (p1 + p2).toLong, 1, p2)     // EOS, granule = total bytes
-    bos.toByteArray
+    out.toArray
   }
 
   /** Walk an Ogg stream: verify every page's capture pattern, version
@@ -2121,64 +1971,46 @@ object MmOps {
     * the packet), and require the final granule to repeat the total
     * packet byte count. Returns (nPages, nPackets, serial,
     * payloadBytes, granule); None on any structural lie. */
-  private[graft] def parseOggMeta(bytes: Array[Byte]): Option[(Int, Int, Int, Long, Long)] = {
-    var i = 0
-    var nPages = 0
-    var nPackets = 0
-    var serial = Int.MinValue
-    var payload = 0L
-    var granule = -1L
-    var sawEos = false
-    def le32(o: Int): Int = (bytes(o) & 0xff) | ((bytes(o + 1) & 0xff) << 8) |
-      ((bytes(o + 2) & 0xff) << 16) | ((bytes(o + 3) & 0xff) << 24)
-    while (i < bytes.length) {
-      if (sawEos) return None // trailing bytes after the EOS page
-      if (i + 27 > bytes.length) return None
-      if (new String(bytes, i, 4, "US-ASCII") != "OggS") return None
-      if (bytes(i + 4) != 0) return None // stream structure version
-      val headerType = bytes(i + 5) & 0xff
-      var g = 0L
-      var k = 7
-      while (k >= 0) { g = (g << 8) | (bytes(i + 6 + k) & 0xff); k -= 1 }
-      val ser = le32(i + 14)
-      val seq = le32(i + 18)
-      val nSeg = bytes(i + 26) & 0xff
-      if (i + 27 + nSeg > bytes.length) return None
-      var bodyLen = 0
-      var packetsHere = 0
-      var s = 0
-      while (s < nSeg) {
-        val lace = bytes(i + 27 + s) & 0xff
-        bodyLen += lace
-        if (lace < 255) packetsHere += 1
-        s += 1
+  private[graft] def parseOggMeta(bytes: Array[Byte]): Option[(Int, Int, Int, Long, Long)] =
+    walk(bytes) { r =>
+      var i = 0L
+      var nPages = 0
+      var nPackets = 0
+      var serial = -1L
+      var payload = 0L
+      var granule = -1L
+      var sawEos = false
+      while (i < r.length) {
+        need(!sawEos) // trailing bytes after the EOS page
+        need(r.fourcc(i) == "OggS" && r.u8(i + 4) == 0) // stream structure version 0
+        val headerType = r.u8(i + 5)
+        val ser = r.u32le(i + 14)
+        val laces = (0 until r.u8(i + 26)).map(s => r.u8(i + 27 + s))
+        val bodyLen = laces.sum
+        val pageLen = 27 + laces.length + bodyLen
+        // CRC check: recompute with the CRC field zeroed
+        val page = java.util.Arrays.copyOfRange(bytes, r.at(i, pageLen), (i + pageLen).toInt)
+        java.util.Arrays.fill(page, 22, 26, 0.toByte)
+        need(oggCrc(page) == r.u32le(i + 22).toInt)
+        if (nPages == 0) {
+          need((headerType & 0x02) != 0) // first page must be BOS
+          serial = ser
+        } else {
+          need((headerType & 0x02) == 0) // BOS only leads
+          need(ser == serial)            // single logical stream
+        }
+        need(r.u32le(i + 18) == nPages) // gapless page sequence
+        if ((headerType & 0x04) != 0) sawEos = true
+        nPages += 1
+        nPackets += laces.count(_ < 255) // a 255 continues the packet
+        payload += bodyLen
+        granule = r.u64le(i + 6)
+        i += pageLen
       }
-      if (i + 27 + nSeg + bodyLen > bytes.length) return None
-      // CRC check: recompute with the CRC field zeroed
-      val pageLen = 27 + nSeg + bodyLen
-      val copy = java.util.Arrays.copyOfRange(bytes, i, i + pageLen)
-      val stored = le32(i + 22)
-      copy(22) = 0; copy(23) = 0; copy(24) = 0; copy(25) = 0
-      if (oggCrc(copy) != stored) return None
-      if (nPages == 0) {
-        if ((headerType & 0x02) == 0) return None // first page must be BOS
-        serial = ser
-      } else {
-        if ((headerType & 0x02) != 0) return None // BOS only leads
-        if (ser != serial) return None            // single logical stream
-      }
-      if (seq != nPages) return None // gapless page sequence
-      if ((headerType & 0x04) != 0) sawEos = true
-      nPages += 1
-      nPackets += packetsHere
-      payload += bodyLen
-      granule = g
-      i += pageLen
+      if (nPages == 0 || !sawEos) None
+      else if (granule != payload) None // corpus rule: granule repeats bytes
+      else Some((nPages, nPackets, serial.toInt, payload, granule))
     }
-    if (nPages == 0 || !sawEos) return None
-    if (granule != payload) return None // corpus rule: granule repeats bytes
-    Some((nPages, nPackets, serial, payload, granule))
-  }
 
   /** Ogg page walk — fourteenth container leg, and the only one
     * exercising LACING-VALUE packet framing (255-continuation bytes
@@ -2200,19 +2032,12 @@ object MmOps {
       |  CAST(230 + doc_id % 10 + doc_id % 300 AS BIGINT) AS granule
       |FROM documents ORDER BY doc_id""".stripMargin) { (s, d) =>
     val src = Tables.documents(s, d).select(col("doc_id"))
-    val outSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("n_pages", IntegerType),
-      StructField("n_packets", IntegerType), StructField("serial", IntegerType),
-      StructField("payload_bytes", LongType), StructField("granule", LongType)))
-    val enc = RowEncoder.encoderFor(outSchema)
-    src.mapPartitions { rows =>
-      rows.map { r =>
-        val docId = r.getLong(0)
-        val (np, nk, ser, payload, granule) = parseOggMeta(syntheticOgg(docId)).getOrElse(
-          throw new IllegalStateException(s"unwalkable planted Ogg for doc $docId"))
-        Row(docId, np, nk, ser, payload, granule)
-      }
-    }(enc).orderBy(col("doc_id"))
+    plantedWalk(src, "doc_id BIGINT, n_pages INT, n_packets INT, serial INT, " +
+        "payload_bytes BIGINT, granule BIGINT") { r =>
+      val docId = r.getLong(0)
+      val (np, nk, ser, payload, granule) = planted("Ogg", docId)(parseOggMeta(syntheticOgg(docId)))
+      Row(docId, np, nk, ser, payload, granule)
+    }
   }
 
   /** Build a minimal AVI: RIFF 'AVI ' with a LIST('hdrl'){avih} header,
@@ -2226,40 +2051,25 @@ object MmOps {
     val nf = 2 + (docId % 5).toInt
     val uspf = 33333 + (docId % 1000).toInt
     val frameLens = Array.tabulate(nf)(i => 5 + ((docId + i) % 9).toInt)
-    val bos = new java.io.ByteArrayOutputStream()
-    def fourcc(s: String): Unit = bos.write(s.getBytes("US-ASCII"))
-    def le32(v: Int): Unit = { bos.write(v & 0xff); bos.write((v >> 8) & 0xff)
-      bos.write((v >> 16) & 0xff); bos.write((v >> 24) & 0xff) }
-    val moviPayload = 4 + frameLens.map(l => 8 + l + l % 2).sum
+    val frameChunks = frameLens.map(l => 8 + even(l).toInt)
+    val moviPayload = 4 + frameChunks.sum
     val riffSize = 4 + (8 + 68) + (8 + moviPayload) + 8 + 16 * nf
-    fourcc("RIFF"); le32(riffSize); fourcc("AVI ")
-    // LIST hdrl { avih(56) }
-    fourcc("LIST"); le32(68); fourcc("hdrl")
-    fourcc("avih"); le32(56)
-    val avih = new Array[Byte](56)
-    def put32(arr: Array[Byte], off: Int, v: Int): Unit = {
-      arr(off) = (v & 0xff).toByte; arr(off + 1) = ((v >> 8) & 0xff).toByte
-      arr(off + 2) = ((v >> 16) & 0xff).toByte; arr(off + 3) = ((v >> 24) & 0xff).toByte
-    }
-    put32(avih, 0, uspf); put32(avih, 16, nf); put32(avih, 32, w); put32(avih, 36, h)
-    bos.write(avih)
+    val out = new Writer().ascii("RIFF").u32le(riffSize).ascii("AVI ")
+    // LIST hdrl { avih(56): µs/frame @0, total frames @16, width @32, height @36 }
+    out.ascii("LIST").u32le(68).ascii("hdrl")
+      .chunk("avih", new Writer().u32le(uspf).zeros(12).u32le(nf).zeros(12)
+        .u32le(w).u32le(h).zeros(16).toArray)
     // LIST movi { nf x 00dc }
-    fourcc("LIST"); le32(moviPayload); fourcc("movi")
-    val offsets = new Array[Int](nf)
-    var moviOff = 4 // offsets are idx1-style: relative to the 'movi' fourcc
+    out.ascii("LIST").u32le(moviPayload).ascii("movi")
     frameLens.zipWithIndex.foreach { case (l, i) =>
-      offsets(i) = moviOff
-      fourcc("00dc"); le32(l)
-      bos.write(Array.tabulate[Byte](l)(j => ((docId * 13 + i * 7 + j) % 251).toByte))
-      if (l % 2 == 1) bos.write(0)
-      moviOff += 8 + l + l % 2
+      out.chunk("00dc", Array.tabulate[Byte](l)(j => ((docId * 13 + i * 7 + j) % 251).toByte))
     }
-    // idx1
-    fourcc("idx1"); le32(16 * nf)
-    frameLens.zipWithIndex.foreach { case (l, i) =>
-      fourcc("00dc"); le32(0x10); le32(offsets(i)); le32(l)
+    // idx1: offsets relative to the 'movi' fourcc
+    out.ascii("idx1").u32le(16 * nf)
+    frameLens.indices.foreach { i =>
+      out.ascii("00dc").u32le(0x10).u32le(4 + frameChunks.take(i).sum).u32le(frameLens(i))
     }
-    bos.toByteArray
+    out.toArray
   }
 
   /** Walk an AVI container: RIFF magic + 'AVI ' form type + declared
@@ -2271,63 +2081,54 @@ object MmOps {
     * Returns (width, height, nFrames, usPerFrame, payloadBytes); None
     * on any structural lie (bad magic, size lie, truncation, missing
     * header, frame-count or index disagreement). */
-  private[graft] def parseAviMeta(bytes: Array[Byte]): Option[(Int, Int, Int, Int, Long)] = {
-    def le32(o: Int): Int = (bytes(o) & 0xff) | ((bytes(o + 1) & 0xff) << 8) |
-      ((bytes(o + 2) & 0xff) << 16) | ((bytes(o + 3) & 0xff) << 24)
-    def cc(o: Int): String = new String(bytes, o, 4, "US-ASCII")
-    if (bytes.length < 12 || cc(0) != "RIFF" || cc(8) != "AVI ") return None
-    if (le32(4) != bytes.length - 8) return None
-    var i = 12
-    var w = -1; var h = -1; var nfHdr = -1; var uspf = -1
-    var framesWalked = 0
-    var payload = 0L
-    var frameIdx = List.empty[(Int, Int)] // (offset-from-movi, size), walked order
-    var sawIdx1 = false
-    var idxOk = true
-    while (i + 8 <= bytes.length) {
-      val id = cc(i)
-      val sz = le32(i + 4)
-      if (i + 8 + sz > bytes.length) return None
-      id match {
-        case "LIST" if sz >= 4 && cc(i + 8) == "hdrl" =>
-          // first subchunk must be the 56-byte avih
-          if (sz < 4 + 8 + 56 || cc(i + 12) != "avih" || le32(i + 16) != 56) return None
-          uspf = le32(i + 20); nfHdr = le32(i + 36); w = le32(i + 52); h = le32(i + 56)
-        case "LIST" if sz >= 4 && cc(i + 8) == "movi" =>
-          var j = i + 12
-          val end = i + 8 + sz
-          while (j + 8 <= end) {
-            if (cc(j) != "00dc") return None
-            val fl = le32(j + 4)
-            if (j + 8 + fl > end) return None
-            frameIdx ::= ((j - (i + 8), fl))
-            framesWalked += 1
-            payload += fl
-            j += 8 + fl + fl % 2
-          }
-          if (j != end) return None
-        case "idx1" =>
-          if (sz % 16 != 0) return None
-          sawIdx1 = true
-          val entries = sz / 16
-          if (entries != framesWalked) idxOk = false
-          val walked = frameIdx.reverse.toArray
-          var e = 0
-          while (e < entries && idxOk) {
-            val o = i + 8 + e * 16
-            if (cc(o) != "00dc" || (le32(o + 4) & 0x10) == 0 ||
-              e >= walked.length || le32(o + 8) != walked(e)._1 ||
-              le32(o + 12) != walked(e)._2) idxOk = false
-            e += 1
-          }
-        case _ => return None
+  private[graft] def parseAviMeta(bytes: Array[Byte]): Option[(Int, Int, Int, Int, Long)] =
+    walk(bytes) { r =>
+      need(r.fourcc(0) == "RIFF" && r.fourcc(8) == "AVI " && r.u32le(4) == r.length - 8)
+      var i = 12L
+      var w = -1; var h = -1; var nfHdr = -1L; var uspf = -1
+      var payload = 0L
+      val frames = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)] // (offset-from-movi, size)
+      var sawIdx1 = false
+      var idxOk = true
+      while (i + 8 <= r.length) {
+        val sz = r.u32le(i + 4)
+        val end = i + 8 + sz
+        need(end <= r.length)
+        r.fourcc(i) match {
+          case "LIST" if sz >= 4 && r.fourcc(i + 8) == "hdrl" =>
+            // first subchunk must be the 56-byte avih
+            need(sz >= 4 + 8 + 56 && r.fourcc(i + 12) == "avih" && r.u32le(i + 16) == 56)
+            uspf = r.u32le(i + 20).toInt; nfHdr = r.u32le(i + 36)
+            w = r.u32le(i + 52).toInt; h = r.u32le(i + 56).toInt
+          case "LIST" if sz >= 4 && r.fourcc(i + 8) == "movi" =>
+            var j = i + 12
+            while (j + 8 <= end) {
+              need(r.fourcc(j) == "00dc")
+              val fl = r.u32le(j + 4)
+              need(j + 8 + fl <= end)
+              frames += ((j - (i + 8), fl))
+              payload += fl
+              j += 8 + even(fl)
+            }
+            need(j == end)
+          case "idx1" =>
+            need(sz % 16 == 0)
+            sawIdx1 = true
+            if (sz / 16 != frames.length) idxOk = false
+            var e = 0
+            while (e < sz / 16 && idxOk) {
+              val o = i + 8 + e * 16L
+              if (r.fourcc(o) != "00dc" || (r.u32le(o + 4) & 0x10) == 0 ||
+                r.u32le(o + 8) != frames(e)._1 || r.u32le(o + 12) != frames(e)._2) idxOk = false
+              e += 1
+            }
+          case _ => malformed
+        }
+        i += 8 + even(sz)
       }
-      i += 8 + sz + sz % 2
+      need(i == r.length && w >= 0 && nfHdr == frames.length && sawIdx1 && idxOk)
+      Some((w, h, frames.length, uspf, payload))
     }
-    if (i != bytes.length) return None
-    if (w < 0 || nfHdr != framesWalked || !sawIdx1 || !idxOk) return None
-    Some((w, h, framesWalked, uspf, payload))
-  }
 
   /** AVI / RIFF-AVI walk — fifteenth container leg: the only one with
     * a NESTED LIST hierarchy and an index chunk (idx1) that must agree
@@ -2349,20 +2150,285 @@ object MmOps {
       |    i -> 5 + (doc_id + i) % 9)) AS BIGINT) AS payload_bytes
       |FROM documents ORDER BY doc_id""".stripMargin) { (s, d) =>
     val src = Tables.documents(s, d).select(col("doc_id"))
-    val outSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("width", IntegerType),
-      StructField("height", IntegerType), StructField("n_frames", IntegerType),
-      StructField("us_per_frame", IntegerType), StructField("payload_bytes", LongType)))
-    val enc = RowEncoder.encoderFor(outSchema)
-    src.mapPartitions { rows =>
-      rows.map { r =>
-        val docId = r.getLong(0)
-        val (w, h, nf, uspf, payload) = parseAviMeta(syntheticAvi(docId)).getOrElse(
-          throw new IllegalStateException(s"unwalkable planted AVI for doc $docId"))
-        Row(docId, w, h, nf, uspf, payload)
-      }
-    }(enc).orderBy(col("doc_id"))
+    plantedWalk(src, "doc_id BIGINT, width INT, height INT, n_frames INT, us_per_frame INT, " +
+        "payload_bytes BIGINT") { r =>
+      val docId = r.getLong(0)
+      val (w, h, nf, uspf, payload) = planted("AVI", docId)(parseAviMeta(syntheticAvi(docId)))
+      Row(docId, w, h, nf, uspf, payload)
+    }
   }
 
-  val ops: Seq[GraftOp] = Seq(meta, decode, chunk, sniff, frameSample, wavMeta, imagePhash, imageNearDup, audioEnergy, mp4Meta, jpegMeta, pngChunks, gifMeta, bmpMeta, tarMeta, zipMeta, pdfMeta, containerCensus, mp3Meta, flacMeta, exifMeta, id3Meta, webpMeta, oggMeta, aviMeta)
+  /** Minimal multi-image ICO — the DIRECTORY-of-offsets leg, whose
+    * cross-check is that every directory entry's offset/length tiles the
+    * file exactly (the multi-image sibling of AVI's idx1-vs-movi check):
+    * ICONDIR(6) + n×ICONDIRENTRY(16) + contiguous fake image payloads.
+    * Entry i: square side 16·2^((docId+i) mod 3) (sides stay ≤64), 32
+    * bpp, payload 40 + 4·side bytes. */
+  private[graft] def syntheticIco(docId: Long): Array[Byte] = {
+    val n = 1 + (docId % 4).toInt
+    val sides = Array.tabulate(n)(i => 16 << ((docId + i) % 3).toInt)
+    val lens = sides.map(s => 40 + 4 * s)
+    val out = new Writer().u16le(0).u16le(1).u16le(n) // reserved, type=icon, count
+    var off = 6 + 16 * n
+    sides.indices.foreach { i =>
+      out.u8(sides(i)).u8(sides(i)) // width, height
+        .u8(0).u8(0)                 // palette, reserved
+        .u16le(1).u16le(32)          // planes, bpp
+        .u32le(lens(i)).u32le(off)
+      off += lens(i)
+    }
+    sides.indices.foreach { i =>
+      out.bytes(Array.tabulate[Byte](lens(i))(j => ((docId * 17 + i * 11 + j) % 251).toByte))
+    }
+    out.toArray
+  }
+
+  /** Walk an ICO directory → (nImages, maxSide, totalImageBytes);
+    * None on any structural lie: bad magic/type, zero entries,
+    * non-zero reserved fields, non-contiguous or out-of-file payload
+    * offsets, trailing bytes. */
+  private[graft] def parseIcoMeta(bytes: Array[Byte]): Option[(Int, Int, Long)] =
+    walk(bytes) { r =>
+      need(r.u16le(0) == 0 && r.u16le(2) == 1)
+      val n = r.u16le(4)
+      need(n >= 1)
+      var expectOff = 6L + 16 * n
+      var maxSide = 0
+      var total = 0L
+      for (i <- 0 until n) {
+        val e = 6 + 16 * i
+        val side = r.u8(e)
+        need(side == r.u8(e + 1)) // non-square lie
+        need(r.u8(e + 3) == 0)    // reserved
+        need(r.u16le(e + 4) == 1) // planes
+        need(r.u32le(e + 12) == expectOff) // directory must tile the file
+        val len = r.u32le(e + 8)
+        expectOff += len
+        total += len
+        maxSide = maxSide max (if (side == 0) 256 else side)
+      }
+      need(expectOff == r.length) // trailing bytes
+      Some((n, maxSide, total))
+    }
+
+  /** ICO directory walk — the offset-directory format: the walker
+    * proves the n ICONDIRENTRY records tile the payload region
+    * exactly (offset chain + total length), the analytic oracle
+    * replays count, max side and payload bytes from the id rule by
+    * expanding entries with a bounded generate_series. */
+  val icoMeta: GraftOp = GraftOp(
+    "mm_ico_meta",
+    """WITH e AS (
+      |  SELECT doc_id, i.i AS i,
+      |    CASE (doc_id + i.i) % 3 WHEN 0 THEN 16 WHEN 1 THEN 32 ELSE 64 END AS side
+      |  FROM documents, generate_series(0, 3) i(i)
+      |  WHERE i.i < 1 + doc_id % 4)
+      |SELECT doc_id,
+      |  CAST(count(*) AS INT) AS n_images,
+      |  CAST(max(side) AS INT) AS max_side,
+      |  CAST(sum(40 + 4 * side) AS BIGINT) AS total_image_bytes
+      |FROM e GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, d) =>
+    val src = Tables.documents(s, d).select(col("doc_id"))
+    plantedWalk(src, "doc_id BIGINT, n_images INT, max_side INT, total_image_bytes BIGINT") { r =>
+      val docId = r.getLong(0)
+      val (n, side, total) = planted("ICO", docId)(parseIcoMeta(syntheticIco(docId)))
+      Row(docId, n, side, total)
+    }
+  }
+
+  private val AiffRates = Array(8000, 11025, 22050, 44100)
+
+  /** Minimal AIFF — the big-endian IFF leg, and the only header that
+    * carries an 80-bit IEEE-754 EXTENDED float (the sample rate): FORM/
+    * AIFF + COMM(18) + SSND carrying frames×channels×bytes of
+    * deterministic samples (odd totals exercise the IFF pad rule). */
+  private[graft] def syntheticAiff(docId: Long): Array[Byte] = {
+    val channels = 1 + (docId % 2).toInt
+    val rate = AiffRates((docId % 4).toInt)
+    val frames = 100 + (docId % 50).toInt
+    val bits = if ((docId / 4) % 2 == 0) 8 else 16
+    val dataLen = frames * channels * (bits / 8)
+    val ssndChunk = 8 + 8 + even(dataLen) // header + offset/block + data + pad
+    val formSize = 4 + (8 + 18) + ssndChunk
+    // 80-bit extended float: 1-bit sign, 15-bit exponent (bias 16383),
+    // 64-bit mantissa with EXPLICIT leading 1
+    val p = 63 - java.lang.Long.numberOfLeadingZeros(rate.toLong)
+    new Writer().ascii("FORM").u32be(formSize).ascii("AIFF")
+      .ascii("COMM").u32be(18)
+      .u16be(channels).u32be(frames).u16be(bits)
+      .u16be(16383 + p).u64be(rate.toLong << (63 - p))
+      .ascii("SSND").u32be(8 + dataLen)
+      .u32be(0).u32be(0) // offset, block size
+      .bytes(Array.tabulate[Byte](dataLen)(j => ((docId * 7 + j) % 251).toByte))
+      .pad(dataLen)
+      .toArray
+  }
+
+  /** Walk an AIFF FORM → (channels, sampleRate, nFrames, sampleBits);
+    * the 80-bit rate decodes with integer shifts only. None on bad
+    * magic, short/oversized chunks, an unnormalized or fractional
+    * rate, SSND/COMM size lies, missing pad, or trailing bytes. */
+  private[graft] def parseAiffMeta(bytes: Array[Byte]): Option[(Int, Int, Int, Int)] =
+    walk(bytes) { r =>
+      need(r.fourcc(0) == "FORM" && r.u32be(4) == r.length - 8L && r.fourcc(8) == "AIFF")
+      var i = 12L
+      var comm = Option.empty[(Int, Int, Int, Int)]
+      var ssndData = -1L
+      while (i < r.length) {
+        val len = r.u32be(i + 4)
+        val end = i + 8 + even(len) // IFF chunks are word-aligned
+        need(end <= r.length)
+        r.fourcc(i) match {
+          case "COMM" =>
+            need(len == 18 && comm.isEmpty)
+            val exp = r.u16be(i + 16)
+            val mant = r.u64be(i + 18)
+            need((exp & 0x8000) == 0) // negative rate
+            need(mant < 0)            // MSB clear = unnormalized
+            val shift = 16383 + 63 - exp
+            need(shift >= 0 && shift <= 63)
+            need(shift == 0 || (mant << (64 - shift)) == 0) // fractional
+            val rate = mant >>> shift
+            need(rate <= Int.MaxValue)
+            comm = Some((r.u16be(i + 8), rate.toInt, r.u32be(i + 10).toInt, r.u16be(i + 14)))
+          case "SSND" =>
+            need(ssndData < 0 && len >= 8)
+            need(r.u32be(i + 8) == 0 && r.u32be(i + 12) == 0) // offset/block
+            ssndData = len - 8
+          case _ => malformed // corpus plants only COMM+SSND
+        }
+        i = end
+      }
+      comm.filter { case (channels, _, frames, bits) =>
+        ssndData >= 0 && ssndData == frames.toLong * channels * (bits / 8)
+      }
+    }
+
+  /** AIFF COMM/SSND walk — the big-endian IFF leg, and the only
+    * header field in the corpus stored as an 80-bit extended float
+    * (the sample rate): the walker decodes it with integer shifts and
+    * cross-checks SSND's payload against frames×channels×bytes; the
+    * oracle replays everything (including duration micros via exact
+    * integral division) from the id rule. */
+  val aiffMeta: GraftOp = GraftOp(
+    "mm_aiff_meta",
+    """SELECT doc_id,
+      |  CAST(1 + doc_id % 2 AS INT) AS channels,
+      |  CAST(CASE doc_id % 4 WHEN 0 THEN 8000 WHEN 1 THEN 11025
+      |       WHEN 2 THEN 22050 ELSE 44100 END AS INT) AS sample_rate,
+      |  CAST(100 + doc_id % 50 AS INT) AS n_frames,
+      |  CAST(CASE WHEN (doc_id // 4) % 2 = 0 THEN 8 ELSE 16 END AS INT) AS sample_bits,
+      |  CAST((100 + doc_id % 50) * 1000000
+      |    // (CASE doc_id % 4 WHEN 0 THEN 8000 WHEN 1 THEN 11025
+      |        WHEN 2 THEN 22050 ELSE 44100 END) AS BIGINT) AS duration_micros
+      |FROM documents ORDER BY doc_id""".stripMargin) { (s, d) =>
+    val src = Tables.documents(s, d).select(col("doc_id"))
+    plantedWalk(src, "doc_id BIGINT, channels INT, sample_rate INT, n_frames INT, " +
+        "sample_bits INT, duration_micros BIGINT") { r =>
+      val docId = r.getLong(0)
+      val (ch, rate, frames, bits) = planted("AIFF", docId)(parseAiffMeta(syntheticAiff(docId)))
+      Row(docId, ch, rate, frames, bits, frames.toLong * 1000000L / rate)
+    }
+  }
+
+  /** Minimal SRT: n sequential cues, 200 ms gaps, per-cue duration
+    * 800 + ((docId+i) mod 7)·100 ms, text "cue i doc <id>". */
+  private[graft] def syntheticSrt(docId: Long): String = {
+    val n = 2 + (docId % 4).toInt
+    val start0 = 500 + (docId % 10).toInt * 10
+    def ts(ms: Long): String = {
+      val h = ms / 3600000; val m = (ms / 60000) % 60
+      val s = (ms / 1000) % 60; val f = ms % 1000
+      f"$h%02d:$m%02d:$s%02d,$f%03d"
+    }
+    val sb = new StringBuilder
+    var t = start0.toLong
+    var i = 0
+    while (i < n) {
+      val dur = 800 + ((docId + i) % 7) * 100
+      sb.append(i + 1).append('\n')
+      sb.append(ts(t)).append(" --> ").append(ts(t + dur)).append('\n')
+      sb.append(s"cue $i doc $docId").append('\n')
+      sb.append('\n')
+      t += dur + 200
+      i += 1
+    }
+    sb.toString
+  }
+
+  private val SrtTs = java.util.regex.Pattern.compile(
+    "(\\d{2}):(\\d{2}):(\\d{2}),(\\d{3}) --> (\\d{2}):(\\d{2}):(\\d{2}),(\\d{3})")
+
+  /** Walk an SRT document → (nCues, totalDurationMs, spanMs,
+    * textChars); None on non-sequential indices, malformed or
+    * reversed timestamps, overlapping cues, missing separators, or
+    * trailing garbage. */
+  private[graft] def parseSrtMeta(srt: String): Option[(Int, Long, Long, Long)] = {
+    val lines = srt.split("\n", -1)
+    var i = 0
+    var cue = 0
+    var prevEnd = -1L
+    var firstStart = -1L
+    var lastEnd = -1L
+    var totalDur = 0L
+    var chars = 0L
+    while (i < lines.length && lines(i).nonEmpty) {
+      if (lines(i) != (cue + 1).toString) return None // sequential indices
+      if (i + 2 >= lines.length) return None
+      val m = SrtTs.matcher(lines(i + 1))
+      if (!m.matches()) return None
+      def ms(o: Int): Long = m.group(o).toLong * 3600000 + m.group(o + 1).toLong * 60000 +
+        m.group(o + 2).toLong * 1000 + m.group(o + 3).toLong
+      val start = ms(1); val end = ms(5)
+      if (end <= start) return None      // reversed / empty cue
+      if (start < prevEnd) return None   // overlap
+      if (firstStart < 0) firstStart = start
+      prevEnd = end; lastEnd = end
+      totalDur += end - start
+      var j = i + 2
+      var sawText = false
+      while (j < lines.length && lines(j).nonEmpty) {
+        chars += lines(j).length; sawText = true; j += 1
+      }
+      if (!sawText) return None          // cue without text
+      if (j >= lines.length) return None // missing terminating blank line
+      i = j + 1
+      cue += 1
+    }
+    while (i < lines.length) { if (lines(i).nonEmpty) return None; i += 1 } // trailing junk
+    if (cue == 0) return None
+    Some((cue, totalDur, lastEnd - firstStart, chars))
+  }
+
+  /** SRT subtitle walk — the CAPTION modality a video-training
+    * pipeline pairs with mm_mp4_meta/mm_avi_meta (text-format
+    * container, but a container all the same: indices, timecode
+    * pairs, separators). The walker enforces sequential cue indices,
+    * well-formed HH:MM:SS,mmm timecodes, monotone NON-OVERLAPPING
+    * cues and terminating separators; the oracle replays cue count,
+    * summed duration, span and text chars analytically from the id
+    * rule (per-cue durations via a bounded generate_series, text
+    * length via length(CAST(doc_id AS VARCHAR))). */
+  val srtMeta: GraftOp = GraftOp(
+    "mm_srt_meta",
+    """WITH c AS (
+      |  SELECT doc_id, i.i AS i, 800 + ((doc_id + i.i) % 7) * 100 AS dur
+      |  FROM documents, generate_series(0, 5) i(i)
+      |  WHERE i.i < 2 + doc_id % 4)
+      |SELECT doc_id,
+      |  CAST(count(*) AS INT) AS n_cues,
+      |  CAST(sum(dur) AS BIGINT) AS total_duration_ms,
+      |  CAST(sum(dur) + 200 * (count(*) - 1) AS BIGINT) AS span_ms,
+      |  CAST(count(*) * (10 + length(CAST(doc_id AS VARCHAR))) AS BIGINT) AS text_chars
+      |FROM c GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, d) =>
+    val src = Tables.documents(s, d).select(col("doc_id"))
+    plantedWalk(src,
+        "doc_id BIGINT, n_cues INT, total_duration_ms BIGINT, span_ms BIGINT, text_chars BIGINT") { r =>
+      val docId = r.getLong(0)
+      val (n, dur, span, chars) = planted("SRT", docId)(parseSrtMeta(syntheticSrt(docId)))
+      Row(docId, n, dur, span, chars)
+    }
+  }
+
+  val ops: Seq[GraftOp] = Seq(meta, decode, chunk, sniff, frameSample, wavMeta, imagePhash, imageNearDup, audioEnergy, mp4Meta, jpegMeta, pngChunks, gifMeta, bmpMeta, tarMeta, zipMeta, pdfMeta, containerCensus, mp3Meta, flacMeta, exifMeta, id3Meta, webpMeta, oggMeta, aviMeta, icoMeta, aiffMeta, srtMeta)
 }

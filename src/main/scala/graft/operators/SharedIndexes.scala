@@ -72,6 +72,10 @@ object SharedIndexes {
     "dedup_minhash_pairs" -> Seq("dedup_minhash_sigs", "dedup_shingled"),
     "dedup_ngram_pairs" -> Seq("dedup_rare_index", "dedup_shingled"),
     "dedup_cluster_labels" -> Seq("dedup_minhash_pairs"),
+    // both fit Lloyd over the registry's `emb.kmScaled` frame: one after
+    // the other, the second reads the cache the first filled instead of
+    // both computing its blocks at once
+    "emb_km_assigned" -> Seq("knn_ivf_assigned"),
     "graph_und_edges" -> Seq("graph_trade_edges"))
 
   /** The index-build pool width from `SPARK_GRAFT_BUILD_THREADS`

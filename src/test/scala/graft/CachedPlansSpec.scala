@@ -77,6 +77,37 @@ class CachedPlansSpec extends AnyFunSuite {
     }
   }
 
+  test("concurrent callers of one key build it once, and its frame stays in Spark's cache") {
+    val key = "cps.singleflight"
+    CachedPlans.invalidate(spark, key)
+    val builds = new java.util.concurrent.atomic.AtomicInteger()
+    val go = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(6)
+    try {
+      val calls = (1 to 6).map { _ =>
+        pool.submit(() => {
+          go.await()
+          CachedPlans.cached(spark, key) {
+            builds.incrementAndGet()
+            Thread.sleep(200) // hold the build open so the callers overlap
+            frame(300)
+          }
+        })
+      }
+      go.countDown()
+      val frames = calls.map(_.get(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(builds.get === 1, "every caller but one must wait for the single build")
+      assert(frames.forall(_ eq frames.head), "every caller must get the built frame")
+      // Dataset.storageLevel is read from Spark's CacheManager
+      assert(frames.head.storageLevel !== StorageLevel.NONE,
+        "the built frame was evicted from Spark's cache")
+      assert(CachedPlans.contains(spark, key))
+    } finally {
+      pool.shutdownNow()
+      CachedPlans.invalidate(spark, key)
+    }
+  }
+
   test("maxFrames is validated with the conf key in the error") {
     spark.conf.set("spark.graft.cache.maxFrames", "zero")
     try {

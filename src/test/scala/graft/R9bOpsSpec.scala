@@ -271,47 +271,47 @@ class R9bOpsSpec extends AnyFunSuite {
   }
 
   test("mm_ico_meta walker: parses planted icons, rejects structural lies") {
-    val good = operators.MmOps2.syntheticIco(7L) // n=4 entries
-    assert(operators.MmOps2.parseIcoMeta(good).exists(_._1 == 4))
+    val good = operators.MmOps.syntheticIco(7L) // n=4 entries
+    assert(operators.MmOps.parseIcoMeta(good).exists(_._1 == 4))
     // bad type
     val badType = good.clone(); badType(2) = 2
-    assert(operators.MmOps2.parseIcoMeta(badType).isEmpty)
+    assert(operators.MmOps.parseIcoMeta(badType).isEmpty)
     // non-contiguous offset: bump first entry's offset
     val badOff = good.clone(); badOff(6 + 12) = (badOff(6 + 12) + 1).toByte
-    assert(operators.MmOps2.parseIcoMeta(badOff).isEmpty)
+    assert(operators.MmOps.parseIcoMeta(badOff).isEmpty)
     // trailing junk
-    assert(operators.MmOps2.parseIcoMeta(good :+ 0.toByte).isEmpty)
+    assert(operators.MmOps.parseIcoMeta(good :+ 0.toByte).isEmpty)
     // truncated payload
-    assert(operators.MmOps2.parseIcoMeta(good.dropRight(1)).isEmpty)
+    assert(operators.MmOps.parseIcoMeta(good.dropRight(1)).isEmpty)
     // non-square entry
     val notSquare = good.clone(); notSquare(6 + 1) = (notSquare(6) + 16).toByte
-    assert(operators.MmOps2.parseIcoMeta(notSquare).isEmpty)
+    assert(operators.MmOps.parseIcoMeta(notSquare).isEmpty)
   }
 
   test("mm_aiff_meta walker: 80-bit rate decode and lie rejection") {
     // all four rates decode exactly through the extended-float path
     (0L to 7L).foreach { id =>
-      val got = operators.MmOps2.parseAiffMeta(operators.MmOps2.syntheticAiff(id))
+      val got = operators.MmOps.parseAiffMeta(operators.MmOps.syntheticAiff(id))
       assert(got.isDefined, s"doc $id")
       val rate = got.get._2
       assert(Seq(8000, 11025, 22050, 44100).contains(rate))
     }
-    val good = operators.MmOps2.syntheticAiff(3L)
+    val good = operators.MmOps.syntheticAiff(3L)
     // FORM size lie
     val badSize = good.clone(); badSize(7) = (badSize(7) + 1).toByte
-    assert(operators.MmOps2.parseAiffMeta(badSize).isEmpty)
+    assert(operators.MmOps.parseAiffMeta(badSize).isEmpty)
     // exponent +1 → the decode honors it: rate doubles (44100 → 88200)
     val expOff = 12 + 8 + 8 // channels(2)+frames(4)+bits(2) → exponent hi byte
     val badExp = good.clone(); badExp(expOff + 1) = (badExp(expOff + 1) + 1).toByte
-    assert(operators.MmOps2.parseAiffMeta(badExp).exists(_._2 == 88200),
+    assert(operators.MmOps.parseAiffMeta(badExp).exists(_._2 == 88200),
       "exponent is live in the decode")
     // dirty mantissa low bit → fractional rate → reject
     val badMant = good.clone(); badMant(expOff + 2 + 7) = (badMant(expOff + 2 + 7) | 1).toByte
-    assert(operators.MmOps2.parseAiffMeta(badMant).isEmpty,
+    assert(operators.MmOps.parseAiffMeta(badMant).isEmpty,
       "non-integral extended-float rate must be rejected")
     // SSND payload length vs COMM frames cross-check
     val badFrames = good.clone(); badFrames(12 + 8 + 5) = (badFrames(12 + 8 + 5) ^ 1).toByte
-    assert(operators.MmOps2.parseAiffMeta(badFrames).isEmpty)
+    assert(operators.MmOps.parseAiffMeta(badFrames).isEmpty)
   }
 
   test("q_median_polish: medians are exact order statistics, decomposition adds up") {
@@ -466,10 +466,10 @@ class R9bOpsSpec extends AnyFunSuite {
   }
 
   test("mm_srt_meta walker: parses planted cues, rejects structural lies") {
-    val good = operators.MmOps2.syntheticSrt(13L) // n = 3 cues
-    assert(operators.MmOps2.parseSrtMeta(good).exists(_._1 == 3))
+    val good = operators.MmOps.syntheticSrt(13L) // n = 3 cues
+    assert(operators.MmOps.parseSrtMeta(good).exists(_._1 == 3))
     // non-sequential index
-    assert(operators.MmOps2.parseSrtMeta(good.replaceFirst("^1\n", "2\n")).isEmpty)
+    assert(operators.MmOps.parseSrtMeta(good.replaceFirst("^1\n", "2\n")).isEmpty)
     // reversed timestamps: swap the arrow operands of the first cue
     val m = java.util.regex.Pattern
       .compile("(\\d{2}:\\d{2}:\\d{2},\\d{3}) --> (\\d{2}:\\d{2}:\\d{2},\\d{3})")
@@ -477,18 +477,18 @@ class R9bOpsSpec extends AnyFunSuite {
     assert(m.find())
     val reversed = good.substring(0, m.start) + m.group(2) + " --> " + m.group(1) +
       good.substring(m.end)
-    assert(operators.MmOps2.parseSrtMeta(reversed).isEmpty)
+    assert(operators.MmOps.parseSrtMeta(reversed).isEmpty)
     // trailing garbage
-    assert(operators.MmOps2.parseSrtMeta(good + "junk\n").isEmpty)
+    assert(operators.MmOps.parseSrtMeta(good + "junk\n").isEmpty)
     // overlap: move the second cue's start before the first cue's end
     // (rebuild cue 2's timestamp line with an early start)
     val lines = good.split("\n")
     val tsIdx = lines.indexWhere(_.contains("-->"), lines.indexWhere(_.contains("-->")) + 1)
     val early = "00:00:00,100 --> 00:00:00,200"
     val overlapped = (lines.updated(tsIdx, early)).mkString("\n")
-    assert(operators.MmOps2.parseSrtMeta(overlapped).isEmpty)
+    assert(operators.MmOps.parseSrtMeta(overlapped).isEmpty)
     // duration accounting on a known id
-    val Some((n, dur, span, chars)) = operators.MmOps2.parseSrtMeta(good)
+    val Some((n, dur, span, chars)) = operators.MmOps.parseSrtMeta(good)
     val durs = (0 until n).map(i => 800L + ((13L + i) % 7) * 100)
     assert(dur === durs.sum)
     assert(span === durs.sum + 200L * (n - 1))
