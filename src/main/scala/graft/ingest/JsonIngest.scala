@@ -26,12 +26,15 @@ object JsonIngest {
     * metadata columns (reference injects topicName/topicOffset/
     * topicPartition/topicGroupId), and split on required fields. */
   def parse(kafkaShaped: DataFrame, schema: StructType, cfg: PipelineConfig): Parsed = {
-    val parsed = kafkaShaped
-      .withColumn("payload", from_json(col("value").cast("string"), schema))
-      .withColumn("topicName", col("topic"))
-      .withColumn("topicPartition", col("partition"))
-      .withColumn("topicOffset", col("offset"))
-      .withColumn("topicGroupId", lit(cfg.groupId))
+    // two projections, so two analyses: payload + metadata, then the
+    // flattened fields (one select reading `from_json(...).f` per field
+    // would leave the parse to be de-duplicated by the optimizer)
+    val parsed = kafkaShaped.select(
+      from_json(col("value").cast("string"), schema).as("payload"),
+      col("topic").as("topicName"),
+      col("partition").as("topicPartition"),
+      col("offset").as("topicOffset"),
+      lit(cfg.groupId).as("topicGroupId"))
     val flat = parsed.select(
       (schema.fieldNames.map(f => col(s"payload.$f").as(f)) ++
         Seq(col("topicName"), col("topicPartition"), col("topicOffset"), col("topicGroupId"))

@@ -47,7 +47,13 @@ class BatchedRetrySink(
     * [[SqlInsertFormatter.insertStatements]]). Statements stream
     * through in chunks of `ChunkSize` (the retry unit must be
     * replayable, so each chunk is materialized, but never the whole
-    * partition). */
+    * partition).
+    *
+    * In [[graft.streaming.Pipeline.runFromSource]] this is one of a
+    * trigger's two lanes: it reads the trigger's one persisted parse
+    * while the dirty sink reads it on a thread beside it, and AQE is
+    * off on the stream's own session, so the write is a single Spark
+    * job (map stage and result stage, no re-planning between them). */
   def writeBatch(table: String, keyExpr: org.apache.spark.sql.Column, batchSize: Int,
       targetTypes: Map[String, String] = Map.empty,
       dialect: SqlDialect = SqlDialect.ClickHouseLike)(
@@ -56,7 +62,7 @@ class BatchedRetrySink(
       targetTypes, dialect)
     val w = writer
     val (retries, backoff) = (maxRetries, backoffMs)
-    stmts.select("stmt").foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
+    stmts.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
       rows.map(_.getString(0)).grouped(BatchedRetrySink.ChunkSize).foreach { group =>
         BatchedRetrySink.retryOnFailure(retries, backoff) {
           w.write(batchId, group.iterator)

@@ -238,24 +238,25 @@ object SqlInsertFormatter {
     * batch; AQE keeps an explicit count. After the exchange the VALUES
     * tuples are formatted, each partition is sorted by (key, source
     * order), and a streaming chunker cuts the windows and packs the
-    * statements, holding one statement and one window at a time. */
+    * statements, holding one statement and one window at a time. The
+    * key and order are stamped in one projection and the chunker reads
+    * the sorted rows as they are, so building the plan takes few eager
+    * analyses. */
   def insertStatements(df: DataFrame, table: String, keyExpr: Column, batchSize: Int,
       targetTypes: Map[String, String] = Map.empty,
       dialect: SqlDialect = SqlDialect.ClickHouseLike): DataFrame = {
     require(batchSize > 0, s"window.size (INSERT batch size) must be positive; got $batchSize")
     val prefix = s"INSERT INTO $table (${df.columns.mkString(",")}) VALUES "
     val parts = df.sparkSession.sparkContext.defaultParallelism
-    df.withColumn("__key", keyExpr)
-      .withColumn("__seq", monotonically_increasing_id())
+    df.select(col("*"), keyExpr.as("__key"), monotonically_increasing_id().as("__seq"))
       .repartition(parts, col("__key"))
       .select(col("__key"), col("__seq"), valuesTuple(df, targetTypes, dialect).as("__tuple"))
       .sortWithinPartitions(col("__key"), col("__seq"))
-      .select(col("__key"), col("__tuple"))
       .mapPartitions(rows => statements(rows, prefix, batchSize))(Encoders.STRING)
       .toDF("stmt")
   }
 
-  /** Cuts `(key, tuple)` rows sorted by key into windows of at most
+  /** Cuts `(key, seq, tuple)` rows sorted by key into windows of at most
     * `batchSize` consecutive tuples of one key, and packs consecutive
     * whole windows into statements of at most `batchSize` tuples
     * (next fit: a window that does not fit starts the next statement).
@@ -270,9 +271,9 @@ object SqlInsertFormatter {
     private def cutWindow(): Unit = {
       val first = in.next()
       val key = first.get(0)
-      window.add(first.getString(1))
+      window.add(first.getString(2))
       while (window.size < batchSize && in.hasNext && java.util.Objects.deepEquals(in.head.get(0), key))
-        window.add(in.next().getString(1))
+        window.add(in.next().getString(2))
     }
 
     def hasNext: Boolean = !window.isEmpty || in.hasNext

@@ -4,10 +4,13 @@ import graft.config.PipelineConfig
 import graft.ingest.JsonIngest
 import graft.sinks.{BatchedRetrySink, SqlDialect, StatementWriter}
 import graft.sources.KafkaIngest
+import java.util.concurrent.atomic.AtomicReference
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
+import scala.collection.immutable.ListMap
 
 /** The complete reference pipeline, composed end-to-end
   * (KafakToClickhouse.scala:17-63 re-expressed):
@@ -23,15 +26,81 @@ import org.apache.spark.sql.types.StructType
 object Pipeline {
 
   /** Enrichment from the reference's MyWindowFunction.process:40-43 —
-    * `dayOfYear` = date prefix of the event time, `sTime` = processing
-    * wall-clock (`current_timestamp` is stamped once per micro-batch,
-    * so it's consistent within a batch — unlike the reference's
-    * per-row `getTimeStr`). */
+    * `dayOfYear` = the first 10 characters of the event time (the
+    * reference's `substr(cTime, 0, 10)`: plain text, so a present but
+    * malformed time never throws the way an implicit timestamp cast
+    * does under ANSI mode), `sTime` = processing wall-clock
+    * (`current_timestamp` is stamped once per micro-batch, so it's
+    * consistent within a batch — unlike the reference's per-row
+    * `getTimeStr`). One projection, so one analysis. */
   def enrich(valid: DataFrame, tsField: String): DataFrame =
-    valid
-      .withColumn("dayOfYear", date_format(col(tsField), "yyyy-MM-dd"))
-      .withColumn("sTime", date_format(current_timestamp(), "yyyy-MM-dd HH:mm:ss"))
+    valid.withColumns(ListMap(
+      "dayOfYear" -> substring(col(tsField), 1, 10),
+      "sTime" -> date_format(current_timestamp(), "yyyy-MM-dd HH:mm:ss")))
 
+  /** One trigger of [[runFromSource]]: persisted parse, two lanes, no
+    * AQE on the stream's session. */
+  private def trigger(batch: DataFrame, batchId: Long, schema: StructType,
+      cfg: PipelineConfig, tsField: String, dirtySink: Option[(DataFrame, Long) => Unit],
+      write: (DataFrame, Long) => Unit): Unit = {
+    val session = batch.sparkSession
+    session.conf.set(SQLConf.ADAPTIVE_EXECUTION_ENABLED.key, "false")
+    val parsed = JsonIngest.parse(batch, schema, cfg)
+    parsed.flat.persist()
+    try {
+      val sc = session.sparkContext
+      val desc = sc.getLocalProperty("spark.job.description")
+      def lane(name: String) = Option(desc).fold(name)(d => s"$d · $name")
+      val failure = new AtomicReference[Throwable]()
+      def fail(e: Throwable): Unit =
+        if (!failure.compareAndSet(null, e)) failure.get.addSuppressed(e)
+      val dirtyLane = dirtySink.map { f =>
+        val t = new Thread(() => {
+          sc.setJobDescription(lane("dirty"))
+          try f(parsed.dirty, batchId) catch { case e: Throwable => fail(e) }
+        }, s"graft-dirty-lane-$batchId")
+        t.setDaemon(true)
+        t.start()
+        t
+      }
+      sc.setJobDescription(lane("write"))
+      try write(enrich(parsed.valid, tsField), batchId)
+      catch { case e: Throwable => fail(e) }
+      finally sc.setJobDescription(desc)
+      var interrupted = false
+      dirtyLane.foreach { t =>
+        while (t.isAlive) try t.join() catch { case _: InterruptedException => interrupted = true }
+      }
+      if (interrupted) fail(new InterruptedException(s"stream thread interrupted in batch $batchId"))
+      Option(failure.get).foreach(e => throw e)
+    } finally parsed.flat.unpersist()
+  }
+
+  /** Starts the pipeline on a Kafka-shaped stream. A trigger is two
+    * Spark jobs, run side by side:
+    *
+    *  - the source read and JSON parse are persisted once, and both
+    *    lanes read that one parse: the dirty sink on a new daemon
+    *    thread, the INSERT write on the stream thread. The lane is
+    *    joined before the parse is unpersisted;
+    *  - the lane thread is made for its batch, not pooled, so it
+    *    inherits the batch's local properties: the stream's job group
+    *    (a `q.stop()` cancels both lanes' jobs) and the SQL execution
+    *    id. Each lane's jobs are described as the engine's batch
+    *    description plus ` · dirty` or ` · write`;
+    *  - if either lane fails, the trigger fails with the first
+    *    failure, the other attached as suppressed. An interrupted
+    *    stream thread still waits for the lane before it rethrows, so
+    *    the unpersist never races a running lane;
+    *  - AQE is off on the stream's own session (`batch.sparkSession`,
+    *    the per-query clone Structured Streaming makes; the caller's
+    *    session is never written). The trigger's plans are
+    *    fixed-shape — one scan, one explicitly sized key exchange, one
+    *    sort — so AQE has nothing to adapt, while it would split each
+    *    stage into a job of its own and re-plan between them. A dirty
+    *    sink that shuffles therefore runs at the session's
+    *    `spark.sql.shuffle.partitions`, uncoalesced.
+    */
   def runFromSource(
       kafkaShaped: DataFrame,
       schema: StructType,
@@ -55,15 +124,7 @@ object Pipeline {
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.ProcessingTime(cfg.triggerIntervalMs))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // two downstream actions (dirty sink + insert write) filter the
-        // one parsed frame — persist it so the source read + JSON parse
-        // run once per trigger
-        val parsed = JsonIngest.parse(batch, schema, cfg)
-        parsed.flat.persist()
-        try {
-          dirtySink.foreach(f => f(parsed.dirty, batchId))
-          write(enrich(parsed.valid, tsField), batchId)
-        } finally parsed.flat.unpersist()
+        trigger(batch, batchId, schema, cfg, tsField, dirtySink, write)
       }
       .start()
   }

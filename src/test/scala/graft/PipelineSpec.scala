@@ -1,12 +1,23 @@
 package graft
 
 import java.nio.file.{Files, Path}
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong, AtomicReference}
+
+import scala.jdk.CollectionConverters._
+import scala.util.Try
 
 import graft.config.PipelineConfig
+import graft.sinks.TestWriter
 import graft.streaming.Pipeline
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnShim
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException}
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end drive of the composed reference pipeline:
@@ -173,5 +184,215 @@ class PipelineSpec extends AnyFunSuite {
     // Derby folds unquoted identifiers to upper case
     assert(row.head.getAs[String]("TOPICNAME") === "events")
     assert(row.head.getAs[String]("DAYOFYEAR").matches("\\d{4}-\\d{2}-\\d{2}"))
+  }
+
+  private def derbyPipeTable(url: String): Unit = {
+    val conn = java.sql.DriverManager.getConnection(url)
+    try {
+      val st = conn.createStatement()
+      try st.execute(
+        """CREATE TABLE PIPE (
+          |  event_id BIGINT, user_id BIGINT, ts VARCHAR(19), event_type VARCHAR(30),
+          |  value DOUBLE, topicName VARCHAR(20), topicPartition INTEGER,
+          |  topicOffset BIGINT, topicGroupId VARCHAR(30),
+          |  dayOfYear VARCHAR(10), sTime VARCHAR(19))""".stripMargin)
+      finally st.close()
+    } finally conn.close()
+  }
+
+  test("a present but malformed event time never kills the stream; dayOfYear is its first 10 characters") {
+    import spark.implicits._
+    // present (so valid by check.field) but no timestamp: each one threw
+    // CAST_INVALID_INPUT under ANSI mode when dayOfYear was date_format
+    val times = Seq("2024-03-05 10:00:00", "", "not a time", "2024-13-45 10:00:00",
+      "2024-02-29 23:59:59", "7")
+    val records = times.zipWithIndex.map { case (t, i) =>
+      ("events", 0, i.toLong,
+        s"""{"event_id":$i,"user_id":${i + 1},"ts":"$t","event_type":"view","value":1.5}""")
+    } :+ (("events", 0, times.size.toLong, """{"event_id":99,"user_id":7}""")) // no ts: dirty
+    val batch = records.toDF("topic", "partition", "offset", "value")
+    val srcDir = Files.createTempDirectory("graft-pipe-poison-src")
+    writeSlice(srcDir, batch, "a")
+    val url = "jdbc:derby:memory:graftpoison;create=true"
+    derbyPipeTable(url)
+    val cfg = PipelineConfig(requiredFields = Seq("user_id", "ts"), windowSize = 4,
+      sinkRetryBackoffMs = 1L, sinkDatabase = "APP", sinkTable = "PIPE")
+    val dirtyRows = new AtomicLong()
+    val q = Pipeline.runFromSource(
+      spark.readStream.schema(batch.schema).parquet(srcDir.toString),
+      payloadSchema, cfg, new graft.sinks.JdbcStatementWriter(url),
+      tsField = "ts", keyField = "user_id",
+      checkpoint = Files.createTempDirectory("graft-pipe-poison-ckpt").toString,
+      dirtySink = Some((df, _) => dirtyRows.addAndGet(df.count())),
+      targetTypes = () => graft.sinks.JdbcCatalogTypes.derby(url, "APP", "PIPE"),
+      dialect = graft.sinks.SqlDialect.Ansi)
+    try {
+      q.processAllAvailable()
+      assert(q.isActive, "the stream must survive a malformed event time")
+    } finally q.stop()
+    assert(dirtyRows.get() === 1L)
+    val conn = java.sql.DriverManager.getConnection(url)
+    val landed = try {
+      val rs = conn.createStatement().executeQuery("SELECT event_id, ts, dayOfYear FROM PIPE")
+      Iterator.continually(rs).takeWhile(_.next())
+        .map(r => (r.getLong(1), r.getString(2), r.getString(3))).toVector
+    } finally conn.close()
+    assert(landed.map(_._1).sorted === times.indices.map(_.toLong))
+    landed.foreach { case (id, ts, day) =>
+      assert(day === ts.take(10), s"event $id: dayOfYear '$day' for ts '$ts'")
+    }
+  }
+
+  private val laneCfg = PipelineConfig(requiredFields = Seq("user_id", "ts"), windowSize = 20,
+    sinkRetryBackoffMs = 1L)
+
+  /** Starts the pipeline on the parquet files under `src`, one file per
+    * trigger, into [[TestWriter]]. */
+  private def startOn(src: Path, ckpt: String, dirtySink: (DataFrame, Long) => Unit,
+      cfg: PipelineConfig = laneCfg): StreamingQuery = Pipeline.runFromSource(
+    spark.readStream.schema(kafkaShapedBatch().schema).option("maxFilesPerTrigger", "1")
+      .parquet(src.toString),
+    payloadSchema, cfg, TestWriter, tsField = "ts", keyField = "user_id",
+    checkpoint = ckpt, dirtySink = Some(dirtySink))
+
+  test("a trigger is one write job and one dirty-count job, in the stream's job group") {
+    val all = kafkaShapedBatch().filter(col("offset") < 300).cache()
+    val srcDir = Files.createTempDirectory("graft-pipe-jobs-src")
+    Seq(0, 100, 200).foreach(lo =>
+      writeSlice(srcDir, all.filter(col("offset") >= lo && col("offset") < lo + 100), s"$lo"))
+    val jobs = new ConcurrentLinkedQueue[java.util.Properties]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.add(e.properties)
+    }
+    TestWriter.reset(failFirst = 0)
+    val dirtyRows = new AtomicLong()
+    spark.sparkContext.addSparkListener(listener)
+    val q = try {
+      val q = startOn(srcDir, Files.createTempDirectory("graft-pipe-jobs-ckpt").toString,
+        (df, _) => dirtyRows.addAndGet(df.count()))
+      try q.processAllAvailable() finally q.stop()
+      ListenerBusDrain(spark.sparkContext)
+      q
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(tupleCount(TestWriter.statements) === all.count() - all.filter(isDirty).count())
+    assert(dirtyRows.get() === all.filter(isDirty).count())
+
+    val runId = q.runId.toString
+    def prop(p: java.util.Properties, k: String) = Option(p.getProperty(k)).getOrElse("")
+    val ours = jobs.asScala.toSeq.filter(p =>
+      prop(p, "spark.job.description").contains(s"runId = $runId") ||
+        prop(p, "spark.jobGroup.id") == runId)
+    val batchOf = "batch = (\\d+)".r
+    val byBatch = ours.groupBy(p => batchOf.findFirstMatchIn(prop(p, "spark.job.description"))
+      .map(_.group(1).toLong).getOrElse(-1L))
+    assert(byBatch.keySet === Set(0L, 1L, 2L), byBatch.keySet)
+    byBatch.foreach { case (b, ps) =>
+      val lanes = ps.map(p => prop(p, "spark.job.description").split(" · ").drop(1).mkString)
+      assert(lanes.sorted === Seq("dirty", "write"), s"batch $b ran ${ps.size} jobs: $lanes")
+    }
+    ours.foreach(p => assert(prop(p, "spark.jobGroup.id") === runId,
+      s"job '${prop(p, "spark.job.description")}' is outside the stream's job group"))
+    // AQE went off on the stream's own session only
+    assert(spark.conf.get("spark.sql.adaptive.enabled") === "true")
+  }
+
+  /** Every throwable in `e`'s cause chain, `e` first. */
+  private def causes(e: Throwable): Seq[Throwable] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(20).toSeq
+
+  /** The frame `dirty` filters, i.e. the trigger's persisted parse. */
+  private def parseOf(dirty: DataFrame): DataFrame =
+    ColumnShim.ofRows(spark, dirty.queryExecution.analyzed.children.head)
+
+  /** After a trigger ended by a failure or a stop: no lane thread is
+    * left and the parse is no longer in Spark's cache. */
+  private def assertLanesDone(q: StreamingQuery, dirty: DataFrame): Unit = {
+    Try(q.awaitTermination())
+    val lanes = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.getName.startsWith("graft-dirty-lane") && t.isAlive)
+    assert(lanes.isEmpty, s"lane threads left alive: ${lanes.map(_.getName)}")
+    assert(parseOf(dirty).storageLevel === StorageLevel.NONE, "the parse is still cached")
+  }
+
+  /** Restarts from `ckpt` with a working sink: every valid row of
+    * `batch` lands exactly once and every dirty row is routed. */
+  private def assertRestartLandsOnce(src: Path, ckpt: String, batch: DataFrame): Unit = {
+    TestWriter.reset(failFirst = 0)
+    val dirtyRows = new AtomicLong()
+    val q = startOn(src, ckpt, (df, _) => dirtyRows.addAndGet(df.count()))
+    try q.processAllAvailable() finally q.stop()
+    val ids = TestWriter.statements.flatMap(_.split("\\),\\(").toSeq
+      .map(t => t.substring(t.lastIndexOf('(') + 1).takeWhile(_ != ',').toLong))
+    val want = batch.filter(!isDirty).select("offset").collect().map(_.getLong(0)).toSeq
+    assert(ids.sorted === want.sorted, "every valid row exactly once after the restart")
+    assert(dirtyRows.get() === batch.filter(isDirty).count())
+  }
+
+  test("a dirtySink that throws fails the query with its exception; a restart lands every row once") {
+    val batch = kafkaShapedBatch().filter(col("offset") < 200).cache()
+    val srcDir = Files.createTempDirectory("graft-pipe-dirtyfail-src")
+    writeSlice(srcDir, batch, "a")
+    val ckpt = Files.createTempDirectory("graft-pipe-dirtyfail-ckpt").toString
+    TestWriter.reset(failFirst = 0)
+    val boom = new IllegalStateException("dirty sink down")
+    val seen = new AtomicReference[DataFrame]()
+    val cachedInLane = new AtomicBoolean()
+    val q = startOn(srcDir, ckpt, (df, _) => {
+      seen.set(df)
+      cachedInLane.set(parseOf(df).storageLevel != StorageLevel.NONE)
+      throw boom
+    })
+    val e = intercept[StreamingQueryException](q.processAllAvailable())
+    assert(causes(e).exists(_ eq boom), e)
+    assert(cachedInLane.get(), "the lane must read the persisted parse")
+    assertLanesDone(q, seen.get())
+    assertRestartLandsOnce(srcDir, ckpt, batch)
+  }
+
+  test("a failing write fails the query only after the running dirty lane ends; a restart lands every row once") {
+    val batch = kafkaShapedBatch().filter(col("offset") < 200).cache()
+    val srcDir = Files.createTempDirectory("graft-pipe-writefail-src")
+    writeSlice(srcDir, batch, "a")
+    val ckpt = Files.createTempDirectory("graft-pipe-writefail-ckpt").toString
+    TestWriter.reset(failFirst = Int.MaxValue)
+    val seen = new AtomicReference[DataFrame]()
+    val laneCount = new AtomicLong(-1L)
+    val q = startOn(srcDir, ckpt, cfg = laneCfg.copy(sinkMaxRetries = 0), dirtySink = (df, _) => {
+      seen.set(df)
+      // still running when the write fails; it reads the parse after
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (TestWriter.attempts.get() == 0 && System.nanoTime() < deadline) Thread.sleep(5)
+      Thread.sleep(200)
+      laneCount.set(df.count())
+    })
+    val e = intercept[StreamingQueryException](q.processAllAvailable())
+    assert(causes(e).exists(c => String.valueOf(c.getMessage).contains("transient failure")), e)
+    assert(laneCount.get() === batch.filter(isDirty).count(),
+      "the trigger must wait for its dirty lane before it fails")
+    assertLanesDone(q, seen.get())
+    assertRestartLandsOnce(srcDir, ckpt, batch)
+  }
+
+  test("a stop during a trigger waits for the running dirty lane, then ends the query cleanly") {
+    val batch = kafkaShapedBatch().filter(col("offset") < 200)
+    val srcDir = Files.createTempDirectory("graft-pipe-stop-src")
+    writeSlice(srcDir, batch, "a")
+    TestWriter.reset(failFirst = 0)
+    val seen = new AtomicReference[DataFrame]()
+    val counted = new java.util.concurrent.CountDownLatch(1)
+    val laneEnded = new AtomicBoolean()
+    val q = startOn(srcDir, Files.createTempDirectory("graft-pipe-stop-ckpt").toString,
+      (df, _) => {
+        seen.set(df)
+        df.count()
+        counted.countDown()
+        Thread.sleep(1500) // no job to cancel: the stop has to wait
+        laneEnded.set(true)
+      })
+    assert(counted.await(60, java.util.concurrent.TimeUnit.SECONDS), "the dirty lane never ran")
+    q.stop()
+    assert(laneEnded.get(), "the trigger returned before its dirty lane ended")
+    assert(q.exception.isEmpty, q.exception)
+    assertLanesDone(q, seen.get())
   }
 }

@@ -1,0 +1,8 @@
+package org.apache.spark
+
+/** Waits until every posted listener event has been delivered, so a
+  * spec's listener has seen a query's jobs before it reads them. The
+  * bus is package-private to Spark, hence this file's package. */
+object ListenerBusDrain {
+  def apply(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
