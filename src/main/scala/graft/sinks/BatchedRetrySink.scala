@@ -53,7 +53,11 @@ class BatchedRetrySink(
     * trigger's two lanes: it reads the trigger's one persisted parse
     * while the dirty sink reads it on a thread beside it, and AQE is
     * off on the stream's own session, so the write is a single Spark
-    * job (map stage and result stage, no re-planning between them). */
+    * job (map stage and result stage, no re-planning between them).
+    * The write may land before the dirty lane fails its trigger; the
+    * pipeline then notes the batch in its checkpoint and skips this
+    * write when the restart replays it, since `batchId` alone does not
+    * make a writer idempotent. */
   def writeBatch(table: String, keyExpr: org.apache.spark.sql.Column, batchSize: Int,
       targetTypes: Map[String, String] = Map.empty,
       dialect: SqlDialect = SqlDialect.ClickHouseLike)(

@@ -4,13 +4,17 @@ import graft.config.PipelineConfig
 import graft.ingest.JsonIngest
 import graft.sinks.{BatchedRetrySink, SqlDialect, StatementWriter}
 import graft.sources.KafkaIngest
+import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.atomic.AtomicReference
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 import scala.collection.immutable.ListMap
+import scala.util.Try
 
 /** The complete reference pipeline, composed end-to-end
   * (KafakToClickhouse.scala:17-63 re-expressed):
@@ -29,20 +33,43 @@ object Pipeline {
     * `dayOfYear` = the first 10 characters of the event time (the
     * reference's `substr(cTime, 0, 10)`: plain text, so a present but
     * malformed time never throws the way an implicit timestamp cast
-    * does under ANSI mode), `sTime` = processing wall-clock
-    * (`current_timestamp` is stamped once per micro-batch, so it's
-    * consistent within a batch — unlike the reference's per-row
-    * `getTimeStr`). One projection, so one analysis. */
+    * does under ANSI mode; for a zero-padded `yyyy-MM-dd HH:mm:ss`
+    * time this is its date, while a time with an offset or without
+    * padding keeps its text prefix, unconverted), `sTime` =
+    * processing wall-clock (`current_timestamp` is stamped once per
+    * micro-batch, so it's consistent within a batch — unlike the
+    * reference's per-row `getTimeStr`). One projection, so one analysis. */
   def enrich(valid: DataFrame, tsField: String): DataFrame =
     valid.withColumns(ListMap(
       "dayOfYear" -> substring(col(tsField), 1, 10),
       "sTime" -> date_format(current_timestamp(), "yyyy-MM-dd HH:mm:ss")))
 
+  /** The checkpoint's note of a batch whose write landed in a trigger
+    * that then failed: the dirty lane threw, or a stop interrupted the
+    * stream thread after the write ended. Spark replays that batch on
+    * restart, and the replay skips the write, so its rows land once.
+    * Read once, when the query starts; written only by a failing
+    * trigger, so a trigger that succeeds does no I/O here. */
+  private final class LandedWrite(checkpoint: String, conf: Configuration) {
+    private val path = new Path(checkpoint, "graft-landed-write")
+    private val fs = path.getFileSystem(conf)
+    val batchId: Option[Long] =
+      if (!fs.exists(path)) None
+      else Try {
+        val in = fs.open(path)
+        try new String(in.readAllBytes(), UTF_8).trim.toLong finally in.close()
+      }.toOption
+    def record(id: Long): Unit = {
+      val out = fs.create(path, true)
+      try out.write(id.toString.getBytes(UTF_8)) finally out.close()
+    }
+  }
+
   /** One trigger of [[runFromSource]]: persisted parse, two lanes, no
     * AQE on the stream's session. */
   private def trigger(batch: DataFrame, batchId: Long, schema: StructType,
       cfg: PipelineConfig, tsField: String, dirtySink: Option[(DataFrame, Long) => Unit],
-      write: (DataFrame, Long) => Unit): Unit = {
+      write: (DataFrame, Long) => Unit, landed: LandedWrite): Unit = {
     val session = batch.sparkSession
     session.conf.set(SQLConf.ADAPTIVE_EXECUTION_ENABLED.key, "false")
     val parsed = JsonIngest.parse(batch, schema, cfg)
@@ -63,16 +90,22 @@ object Pipeline {
         t.start()
         t
       }
-      sc.setJobDescription(lane("write"))
-      try write(enrich(parsed.valid, tsField), batchId)
-      catch { case e: Throwable => fail(e) }
-      finally sc.setJobDescription(desc)
+      val replayed = landed.batchId.contains(batchId)
+      val wrote = replayed || {
+        sc.setJobDescription(lane("write"))
+        try { write(enrich(parsed.valid, tsField), batchId); true }
+        catch { case e: Throwable => fail(e); false }
+        finally sc.setJobDescription(desc)
+      }
       var interrupted = false
       dirtyLane.foreach { t =>
         while (t.isAlive) try t.join() catch { case _: InterruptedException => interrupted = true }
       }
       if (interrupted) fail(new InterruptedException(s"stream thread interrupted in batch $batchId"))
-      Option(failure.get).foreach(e => throw e)
+      Option(failure.get).foreach { e =>
+        if (wrote && !replayed) Try(landed.record(batchId)).failed.foreach(e.addSuppressed)
+        throw e
+      }
     } finally parsed.flat.unpersist()
   }
 
@@ -92,6 +125,14 @@ object Pipeline {
     *    failure, the other attached as suppressed. An interrupted
     *    stream thread still waits for the lane before it rethrows, so
     *    the unpersist never races a running lane;
+    *  - the write no longer waits for the dirty sink, so it can land
+    *    its rows in a trigger that the dirty lane (or a stop) then
+    *    fails. Such a trigger notes its batch id in the checkpoint
+    *    directory (`graft-landed-write`), and the restart's replay of
+    *    that batch runs only the dirty lane: each valid row lands once.
+    *    A failing write is replayed whole, as before: the writer keeps
+    *    no record of which partitions landed, so their rows can land
+    *    again (at-least-once);
     *  - AQE is off on the stream's own session (`batch.sparkSession`,
     *    the per-query clone Structured Streaming makes; the caller's
     *    session is never written). The trigger's plans are
@@ -117,6 +158,7 @@ object Pipeline {
       dialect: SqlDialect = SqlDialect.ClickHouseLike): StreamingQuery = {
     val sink = new BatchedRetrySink(writer, cfg.sinkMaxRetries, cfg.sinkRetryBackoffMs)
     val types = targetTypes() // sink open: one catalog round-trip
+    val landed = new LandedWrite(checkpoint, kafkaShaped.sparkSession.sparkContext.hadoopConfiguration)
     val write = sink.writeBatch(
       s"${cfg.sinkDatabase}.${cfg.sinkTable}", col(keyField), cfg.windowSize,
       types, dialect) _
@@ -124,7 +166,7 @@ object Pipeline {
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.ProcessingTime(cfg.triggerIntervalMs))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        trigger(batch, batchId, schema, cfg, tsField, dirtySink, write)
+        trigger(batch, batchId, schema, cfg, tsField, dirtySink, write, landed)
       }
       .start()
   }

@@ -315,16 +315,17 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   /** Restarts from `ckpt` with a working sink: every valid row of
-    * `batch` lands exactly once and every dirty row is routed. */
+    * `batch` has landed exactly once, counting what the failed run
+    * wrote (TestWriter keeps its store), and every dirty row is routed. */
   private def assertRestartLandsOnce(src: Path, ckpt: String, batch: DataFrame): Unit = {
-    TestWriter.reset(failFirst = 0)
+    TestWriter.heal()
     val dirtyRows = new AtomicLong()
     val q = startOn(src, ckpt, (df, _) => dirtyRows.addAndGet(df.count()))
     try q.processAllAvailable() finally q.stop()
     val ids = TestWriter.statements.flatMap(_.split("\\),\\(").toSeq
       .map(t => t.substring(t.lastIndexOf('(') + 1).takeWhile(_ != ',').toLong))
     val want = batch.filter(!isDirty).select("offset").collect().map(_.getLong(0)).toSeq
-    assert(ids.sorted === want.sorted, "every valid row exactly once after the restart")
+    assert(ids.sorted === want.sorted, "every valid row exactly once over the failed run and the restart")
     assert(dirtyRows.get() === batch.filter(isDirty).count())
   }
 
@@ -346,6 +347,8 @@ class PipelineSpec extends AnyFunSuite {
     assert(causes(e).exists(_ eq boom), e)
     assert(cachedInLane.get(), "the lane must read the persisted parse")
     assertLanesDone(q, seen.get())
+    // the write ran beside the failing lane and landed its rows
+    assert(tupleCount(TestWriter.statements) === batch.filter(!isDirty).count())
     assertRestartLandsOnce(srcDir, ckpt, batch)
   }
 
